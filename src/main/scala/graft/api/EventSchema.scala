@@ -83,15 +83,15 @@ object EventSchema {
   def serverNameFilter(name: String): Column =
     lower(col("event.tenantId.serverName.string")) === name.toLowerCase
 
-  /** Parse a UTF-8 JSON payload column into `event` (typed) + raw `json`.
+  /** Parse the UTF-8 JSON `payload` column into `event` (typed) + raw `json`.
     *
     * PERMISSIVE mode with `columnNameOfCorruptRecord` reproduces the
     * reference's `{"INVALID JSON": raw}` fallback as a populated
     * `event.`INVALID JSON`` field instead of a dropped or poisoned row.
     */
-  def parse(df: DataFrame, payloadCol: String = "payload"): DataFrame =
+  def parse(df: DataFrame): DataFrame =
     df
-      .withColumn("json", col(payloadCol).cast(StringType))
+      .withColumn("json", col("payload").cast(StringType))
       .withColumn(
         "event",
         from_json(

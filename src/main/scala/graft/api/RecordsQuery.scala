@@ -5,13 +5,15 @@ import java.time.Instant
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.operators.Deaggregate
+import graft.plans.KplExplode
 
 /** The reference's `GET /records` query surface as a typed Scala API
   * (SURVEY.md §2.3): 7 URL parameters → validated plan over a record stream.
   *
-  * Pipeline (SURVEY.md §3.1): source scan with time pushdown → KPL
-  * de-aggregate (flatten) → JSON decode → conjunctive filters → sink.
+  * Pipeline (SURVEY.md §3.1): source scan from the lookback start → KPL
+  * de-aggregate (flatten) → JSON decode → conjunctive filters → sink. The
+  * batch plan ([[plan]]) and the catch-up stream
+  * ([[graft.streaming.RecordsStream.records]]) share [[pipeline]].
   */
 object RecordsQuery {
 
@@ -92,18 +94,25 @@ object RecordsQuery {
 
   /** Build the full plan over an envelope DataFrame
     * (`data: binary, approximateArrivalTimestamp: timestamp`, per
-    * SURVEY.md §1.4). The time filter sits directly above the scan so file
-    * sources get it pushed down; the streaming source maps it to its
-    * starting position (the analog of the reference's AT_TIMESTAMP iterator).
+    * SURVEY.md §1.4): the lookback filter, then [[pipeline]]. The filter is
+    * evaluated on every envelope row — the batch kpl scan has no filter
+    * pushdown and reads every frame. Only the stream gets the start into
+    * the source, as `startingTimestampMs`
+    * ([[graft.streaming.RecordsStream.envelopeStream]], the analog of the
+    * reference's AT_TIMESTAMP iterator).
     */
   def plan(envelope: DataFrame, q: Query, now: Instant): DataFrame = {
     val start = java.sql.Timestamp.from(startTimestamp(q, now))
-    val scanned = envelope.filter(col("approximateArrivalTimestamp") >= lit(start))
-    val flattened = Deaggregate.explodePayloadsNative(scanned, keepCorrupt = false)
-    EventSchema.parse(flattened)
+    pipeline(envelope.filter(col("approximateArrivalTimestamp") >= lit(start)), q)
+  }
+
+  /** The one records plan, shared by batch and stream: KPL flatten
+    * (strict-drop, [[KplExplode.userRecords]]) → JSON decode → the query's
+    * filters, projected to `json` + `event`. */
+  def pipeline(envelope: DataFrame, q: Query): DataFrame =
+    EventSchema.parse(KplExplode.userRecords(envelope))
       .filter(predicate(q))
       .select(col("json"), col("event"))
-  }
 
   /** Validate + plan in one step, the `GET /records` analog. */
   def records(

@@ -1,22 +1,24 @@
 package graft.plans
 
+import org.apache.spark.sql.{DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 import graft.kpl.KplCodec
 
-/** Native Catalyst generator for KPL de-aggregation (SURVEY.md O3, the M3
-  * "promote UDF → Generator" step): one envelope row fans out to N
-  * `(payload, corrupt)` rows with no intermediate array value.
-  *
-  * Versus the UDF + explode formulation, the generator skips materializing
-  * an `array<binary>` per input row (the UDF must build and copy the whole
-  * array before explode unrolls it): payloads stream straight out of the
-  * protobuf decode loop. Corrupt aggregates surface as a single flagged row
-  * carrying the raw bytes, rather than being dropped silently as the
-  * reference does (`kinesisReader/index.js:163-164`).
+/** Native Catalyst generator for KPL de-aggregation (SURVEY.md O3): one
+  * envelope row fans out to N `(payload, corrupt)` rows with no
+  * intermediate array value — payloads stream straight out of the protobuf
+  * decode loop. A bare (non-KPL) record yields itself, the identity path at
+  * `kinesisReader/index.js:170-174`; a null input yields no rows. Corrupt
+  * aggregates surface as a single flagged row carrying the raw bytes, rather
+  * than being dropped silently as the reference does
+  * (`kinesisReader/index.js:163-164`); that `corrupt` column is the side
+  * channel, reachable from SQL as `graft_kpl_explode` once
+  * [[graft.GraftExtensions]] is installed.
   *
   * Plan integration: `Generate graft_kpl_explode(data)` — whole-stage
   * codegen keeps the surrounding operators fused; the generator itself
@@ -51,4 +53,20 @@ case class KplExplode(child: Expression)
     copy(child = newChild)
 
   override def prettyName: String = "graft_kpl_explode"
+}
+
+object KplExplode {
+
+  /** The engine's one KPL flatten: every column of `envelope` plus one
+    * `payload: binary` row per user record of its `data` column. Corrupt
+    * aggregates are dropped, the reference's strict-drop behavior
+    * (`kinesisReader/index.js:163-164`); callers that want them select the
+    * generator's `corrupt` column directly. */
+  def userRecords(envelope: DataFrame): DataFrame =
+    envelope
+      .select(col("*"),
+        GraftBridge.column(KplExplode(GraftBridge.expression(col("data"))))
+          .as(Seq("payload", "corrupt")))
+      .filter(!col("corrupt"))
+      .drop("corrupt")
 }

@@ -29,8 +29,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `kinesisReader/index.js:22`) feeds admission control, so
   *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2);
   *  - rows carry the Kinesis envelope (`data` still KPL-aggregated —
-  *    de-aggregation is the downstream [[graft.operators.Deaggregate]]
-  *    operator, exactly as in the reference pipeline).
+  *    de-aggregation is the downstream [[graft.plans.KplExplode]]
+  *    generator, exactly as in the reference pipeline).
   *
   * Shard file framing: repeated [tsMillis: i64][pkLen: i32][pk bytes]
   * [dataLen: i32][data bytes]. [[KplShardFiles.write]] produces it.
@@ -43,7 +43,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * consumes. Every planner-facing interface is backend-agnostic.
   */
 object KplFileSource {
-  val ShortName = "kpl-files"
   val ProviderClass: String = classOf[KplFileTableProvider].getName
 
   val Schema: StructType = StructType(Seq(

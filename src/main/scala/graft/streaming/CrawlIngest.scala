@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions.{col, from_json}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{ArrayType, FloatType, LongType, StringType, StructField, StructType}
 
-import graft.operators.Deaggregate
 import graft.ops.CrawlMouth
+import graft.plans.KplExplode
 import graft.sources.KplFileSource
 
 /** THE PRODUCT STORY, END TO END: the reference's entire pipeline
@@ -17,7 +17,7 @@ import graft.sources.KplFileSource
   *
   * One streaming plan: the Kinesis-shaped DSv2 source (file backend for
   * offline runs, [[graft.sources.KinesisHttpBackend]] for the wire) →
-  * [[Deaggregate.explodePayloadsNative]] (the Catalyst generator, O3) →
+  * [[KplExplode.userRecords]] (the Catalyst generator, O3) →
   * `from_json` doc decode → optional boilerplate extraction (the mouth's
   * `extractMarkup` pre-stage, `q_txt_extract`'s oracle-gated chain) →
   * [[CrawlMouth.admissionStream]].
@@ -49,8 +49,8 @@ import graft.sources.KplFileSource
   * joins plus an nprobe-bounded probe. Corrupt KPL aggregates and
   * undecodable payloads are DROPPED at the seam — the reference's
   * strict-drop behavior (`kinesisReader/index.js:163-164`); callers that
-  * need the corrupt side-channel run [[Deaggregate.explodePayloads]]
-  * with `keepCorrupt = true` on the same envelope stream.
+  * need the corrupt side-channel select the [[KplExplode]] generator's
+  * `corrupt` column on the same envelope stream.
   */
 object CrawlIngest {
 
@@ -68,7 +68,7 @@ object CrawlIngest {
     * rows for broken JSON; a doc without an id or text cannot enter the
     * manifest, which is keyed by `doc_id`). */
   def docsFromEnvelopes(envelope: DataFrame): DataFrame =
-    Deaggregate.explodePayloadsNative(envelope, keepCorrupt = false)
+    KplExplode.userRecords(envelope)
       .select(from_json(col("payload").cast("string"), DocPayloadSchema).as("doc"))
       .select(col("doc.doc_id").as("doc_id"), col("doc.text").as("text"),
         col("doc.embedding").as("embedding"))

@@ -1,10 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
-import graft.api.{EventSchema, RecordsQuery}
-import graft.operators.Deaggregate
+import graft.api.RecordsQuery
 import graft.sources.KplFileSource
 
 /** Streaming analog of the reference's `/records` pipeline (SURVEY.md §3.1):
@@ -27,14 +25,10 @@ object RecordsStream {
       .format(KplFileSource.ProviderClass)
       .option("path", path)
       .option("startingTimestampMs", nowMs - q.durationMinutes * 60000L)
-      .option("maxRecordsPerFetch", 100)
       .load()
 
-  /** Full streaming records pipeline: flatten, decode, filter. */
-  def records(envelope: DataFrame, q: RecordsQuery.Query): DataFrame = {
-    val flattened = Deaggregate.explodePayloads(envelope, keepCorrupt = false)
-    EventSchema.parse(flattened)
-      .filter(RecordsQuery.predicate(q))
-      .select(col("json"), col("event"))
-  }
+  /** Full streaming records pipeline: the batch plan's
+    * [[RecordsQuery.pipeline]] over the stream. */
+  def records(envelope: DataFrame, q: RecordsQuery.Query): DataFrame =
+    RecordsQuery.pipeline(envelope, q)
 }

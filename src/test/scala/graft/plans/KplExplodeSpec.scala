@@ -2,13 +2,13 @@ package graft.plans
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 import graft.kpl.KplCodec
-import graft.operators.Deaggregate
 
 class KplExplodeSpec extends AnyFunSuite with Matchers with SparkSpec {
 
@@ -22,23 +22,33 @@ class KplExplodeSpec extends AnyFunSuite with Matchers with SparkSpec {
       .toDF("id", "data")
   }
 
-  test("native generator output matches the UDF+explode reference path") {
-    val df = fixture().filter(col("data").isNotNull)
-    def normalize(d: org.apache.spark.sql.DataFrame) =
-      d.select(col("id"), col("_corrupt_aggregate"), col("payload"))
-        .collect()
-        .map(r => (r.getLong(0), r.getBoolean(1),
-          Option(r.getAs[Array[Byte]](2)).map(_.toSeq)))
-        .sortBy(t => (t._1, t._3.map(_.mkString(",")).getOrElse("")))
-    normalize(Deaggregate.explodePayloadsNative(df)) shouldBe
-      normalize(Deaggregate.explodePayloads(df))
+  /** `(id, corrupt, payload)` rows of the bare generator over the fixture. */
+  private def generated(): Array[(Long, Boolean, Seq[Byte])] =
+    fixture()
+      .select(col("id"),
+        GraftBridge.column(KplExplode(GraftBridge.expression(col("data"))))
+          .as(Seq("payload", "corrupt")))
+      .collect()
+      .map(r => (r.getLong(0), r.getBoolean(2), r.getAs[Array[Byte]](1).toSeq))
+
+  private def ordered(rows: Seq[(Long, Boolean, Seq[Byte])]) =
+    rows.sortBy(t => (t._1, t._3.mkString(",")))
+
+  test("generator rows equal the KplCodec.deaggregate reference") {
+    val reference = fixture().collect().toSeq.flatMap { r =>
+      val id = r.getLong(0)
+      Option(r.getAs[Array[Byte]](1)).toSeq.flatMap(data =>
+        KplCodec.deaggregate(data) match {
+          case KplCodec.Aggregate(ps)   => ps.map(p => (id, false, p.toSeq))
+          case KplCodec.Single(p)       => Seq((id, false, p.toSeq))
+          case KplCodec.Corrupt(raw, _) => Seq((id, true, raw.toSeq))
+        })
+    }
+    ordered(generated().toSeq) shouldBe ordered(reference)
   }
 
   test("generator streams aggregate payloads and flags corrupt rows") {
-    val rows = Deaggregate.explodePayloadsNative(fixture())
-      .select(col("id"), col("_corrupt_aggregate"), col("payload"))
-      .collect()
-      .map(r => (r.getLong(0), r.getBoolean(1), new String(r.getAs[Array[Byte]](2), UTF_8)))
+    val rows = generated().map(r => (r._1, r._2, new String(r._3.toArray, UTF_8)))
       .sortBy(r => (r._1, r._3))
     rows.count(_._1 == 1L) shouldBe 3
     rows.filter(_._1 == 1L).map(_._3) shouldBe Array("a", "bb", "ccc")
@@ -48,7 +58,8 @@ class KplExplodeSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("strict-drop mode removes corrupt aggregates (reference parity)") {
-    val rows = Deaggregate.explodePayloadsNative(fixture(), keepCorrupt = false)
+    val rows = KplExplode.userRecords(fixture())
+    rows.columns.toSeq shouldBe Seq("id", "data", "payload")
     rows.filter(col("id") === 3L).count() shouldBe 0
     rows.count() shouldBe 4
   }

@@ -386,7 +386,7 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
       .option("accessKeyId", creds.accessKeyId)
       .option("secretAccessKey", creds.secretAccessKey)
       .load()
-    val flat = graft.operators.Deaggregate.explodePayloadsNative(df, keepCorrupt = true)
+    val flat = graft.plans.KplExplode.userRecords(df)
     flat.selectExpr("CAST(payload AS STRING) AS p").collect()
       .map(_.getString(0)).sorted shouldBe
       Array("closed-tail", "r0", "r1", """{"id": 1}""", """{"id": 2}""")

@@ -162,8 +162,7 @@ class KinesisWireSpec extends AnyFunSuite with Matchers with SparkSpec {
 
     // the downstream de-aggregation operator flattens the KPL aggregate:
     // 2 plain + 2 aggregated + 1 closed-shard record = 5 user records
-    val flat = graft.operators.Deaggregate
-      .explodePayloadsNative(df, keepCorrupt = true)
+    val flat = graft.plans.KplExplode.userRecords(df)
     flat.count() shouldBe 5L
     flat.selectExpr("CAST(payload AS STRING) AS p").collect()
       .map(_.getString(0)).sorted shouldBe
