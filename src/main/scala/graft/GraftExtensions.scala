@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.plans.{DotProduct, H32, KplExplode, SquaredDistance, ZOrder2}
 
@@ -13,56 +13,32 @@ import graft.plans.{DotProduct, H32, KplExplode, SquaredDistance, ZOrder2}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.kplExplodeDescriptor)
-    ext.injectFunction(GraftExtensions.h32Descriptor)
-    ext.injectFunction(GraftExtensions.dotDescriptor)
-    ext.injectFunction(GraftExtensions.sqDistDescriptor)
-    ext.injectFunction(GraftExtensions.zorderDescriptor)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     // Band θ-join → bucketized equi-join rewrite (graft.plans.BandJoinRewrite)
     ext.injectOptimizerRule(_ => graft.plans.BandJoinRewrite)
   }
 }
 
 object GraftExtensions {
-  private val kplExplodeDescriptor = (
-    FunctionIdentifier("graft_kpl_explode"),
-    new ExpressionInfo(classOf[KplExplode].getName, "graft_kpl_explode"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 1, "graft_kpl_explode takes exactly one argument")
-      KplExplode(children.head)
+  private def descriptor(name: String, cls: Class[_], arity: Int)(
+      build: Seq[Expression] => Expression)
+      : (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+    FunctionIdentifier(name),
+    new ExpressionInfo(cls.getName, name),
+    (children: Seq[Expression]) => {
+      require(children.length == arity,
+        s"$name takes exactly ${if (arity == 1) "one argument" else "two arguments"}")
+      build(children)
     })
 
-  private val h32Descriptor = (
-    FunctionIdentifier("graft_h32"),
-    new ExpressionInfo(classOf[H32].getName, "graft_h32"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 1, "graft_h32 takes exactly one argument")
-      H32(children.head)
-    })
-
-  private val dotDescriptor = (
-    FunctionIdentifier("graft_dot"),
-    new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 2, "graft_dot takes exactly two arguments")
-      DotProduct(children.head, children(1))
-    })
-
-  private val sqDistDescriptor = (
-    FunctionIdentifier("graft_sqdist"),
-    new ExpressionInfo(classOf[SquaredDistance].getName, "graft_sqdist"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 2, "graft_sqdist takes exactly two arguments")
-      SquaredDistance(children.head, children(1))
-    })
-
-  private val zorderDescriptor = (
-    FunctionIdentifier("graft_zorder"),
-    new ExpressionInfo(classOf[ZOrder2].getName, "graft_zorder"),
-    (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      require(children.length == 2, "graft_zorder takes exactly two arguments")
-      ZOrder2(children.head, children(1))
-    })
+  /** The engine's SQL functions, injected by [[GraftExtensions.apply]] and
+    * registered by [[register]]. */
+  private val functions = Seq(
+    descriptor("graft_kpl_explode", classOf[KplExplode], 1)(c => KplExplode(c.head)),
+    descriptor("graft_h32", classOf[H32], 1)(c => H32(c.head)),
+    descriptor("graft_dot", classOf[DotProduct], 2)(c => DotProduct(c.head, c(1))),
+    descriptor("graft_sqdist", classOf[SquaredDistance], 2)(c => SquaredDistance(c.head, c(1))),
+    descriptor("graft_zorder", classOf[ZOrder2], 2)(c => ZOrder2(c.head, c(1))))
 
   /** Imperative registration for sessions built without the extensions
     * config (tests, notebooks). Idempotent. */
@@ -70,15 +46,7 @@ object GraftExtensions {
     if (!spark.experimental.extraOptimizations.contains(graft.plans.BandJoinRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ graft.plans.BandJoinRewrite
-    spark.sessionState.functionRegistry.registerFunction(
-      kplExplodeDescriptor._1, kplExplodeDescriptor._2, kplExplodeDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      h32Descriptor._1, h32Descriptor._2, h32Descriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      dotDescriptor._1, dotDescriptor._2, dotDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      sqDistDescriptor._1, sqDistDescriptor._2, sqDistDescriptor._3)
-    spark.sessionState.functionRegistry.registerFunction(
-      zorderDescriptor._1, zorderDescriptor._2, zorderDescriptor._3)
+    functions.foreach { case (id, info, builder) =>
+      spark.sessionState.functionRegistry.registerFunction(id, info, builder) }
   }
 }

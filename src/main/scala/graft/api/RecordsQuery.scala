@@ -92,19 +92,21 @@ object RecordsQuery {
     preds.reduceOption(_ && _).getOrElse(lit(true))
   }
 
+  /** The `/records` lookback: envelope rows that arrived at or after
+    * [[startTimestamp]] — the analog of the reference's AT_TIMESTAMP
+    * iterator (`kinesisReader/index.js:77-81`). Batch ([[plan]]) and
+    * stream ([[graft.streaming.RecordsStream.envelopeStream]]) both apply
+    * this one plan filter; the kpl scan does not push it down, so every
+    * frame is read and the filter drops those before the start. */
+  def lookback(envelope: DataFrame, q: Query, now: Instant): DataFrame =
+    envelope.filter(
+      col("approximateArrivalTimestamp") >= lit(java.sql.Timestamp.from(startTimestamp(q, now))))
+
   /** Build the full plan over an envelope DataFrame
     * (`data: binary, approximateArrivalTimestamp: timestamp`, per
-    * SURVEY.md §1.4): the lookback filter, then [[pipeline]]. The filter is
-    * evaluated on every envelope row — the batch kpl scan has no filter
-    * pushdown and reads every frame. Only the stream gets the start into
-    * the source, as `startingTimestampMs`
-    * ([[graft.streaming.RecordsStream.envelopeStream]], the analog of the
-    * reference's AT_TIMESTAMP iterator).
-    */
-  def plan(envelope: DataFrame, q: Query, now: Instant): DataFrame = {
-    val start = java.sql.Timestamp.from(startTimestamp(q, now))
-    pipeline(envelope.filter(col("approximateArrivalTimestamp") >= lit(start)), q)
-  }
+    * SURVEY.md §1.4): [[lookback]], then [[pipeline]]. */
+  def plan(envelope: DataFrame, q: Query, now: Instant): DataFrame =
+    pipeline(lookback(envelope, q, now), q)
 
   /** The one records plan, shared by batch and stream: KPL flatten
     * (strict-drop, [[KplExplode.userRecords]]) → JSON decode → the query's

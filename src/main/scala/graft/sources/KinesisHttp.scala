@@ -41,12 +41,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * bounded (oldest positions evicted) and the iterator→state map is a
   * bounded LRU, so a long-lived driver's footprint stays O(1) per shard.
   *
-  * AT_TIMESTAMP iterators own a DISTINCT position space (their zero is
-  * the timestamp point, not the readable start), so pages served through
-  * them never write resume anchors — a positioned ordinal resume must
-  * not floor onto a timestamp-space anchor whose real sequence is far
-  * ahead (records before the resume point would be silently skipped).
-  *
   * Throttling: `GetRecords` is limited per shard per second; throttled
   * calls surface as `ProvisionedThroughputExceededException` /
   * `ThrottlingException` (HTTP 400) or 5xx. Those retry on a bounded
@@ -76,18 +70,14 @@ final class KinesisHttpApi(
   @transient private lazy val shardMeta =
     new java.util.concurrent.ConcurrentHashMap[String, ShardInfo]()
   /** Per-token state: the stream/shard, the ordinal position of the next
-    * record the iterator will yield, the anchor store pages should write
-    * into (`None` for AT_TIMESTAMP-derived iterators, whose position
-    * space must never pollute the ordinal resume anchors), the REAL
-    * sequence string of the last record this iterator LINEAGE consumed
-    * (the exact `AFTER_SEQUENCE_NUMBER` re-acquire point when the server
-    * expires the token mid-drain — seeded with the resume anchor for
-    * positioned lineages), and the original AT_TIMESTAMP point for
-    * timestamp lineages that expire before consuming anything. */
+    * record the iterator will yield, the anchor store pages write into,
+    * and the REAL sequence string of the last record this iterator
+    * LINEAGE consumed (the exact `AFTER_SEQUENCE_NUMBER` re-acquire point
+    * when the server expires the token mid-drain — seeded with the resume
+    * anchor for positioned lineages). */
   private final case class IterState(
       streamName: String, shardId: String, nextPos: Long,
-      anchors: Option[KinesisAnchorStore.ShardAnchors],
-      lastSeq: Option[String], atTimestampMs: Option[Long])
+      anchors: KinesisAnchorStore.ShardAnchors, lastSeq: Option[String])
 
   /** live iterator token → [[IterState]]. Tokens are opaque, so GetRecords
     * responses must be attributed here. BOUNDED LRU: latestPosition probes
@@ -170,7 +160,6 @@ final class KinesisHttpApi(
       case (k, v: String) => n.put(k, v)
       case (k, v: Int) => n.put(k, v)
       case (k, v: Long) => n.put(k, v)
-      case (k, v: Double) => n.put(k, v)
       case (k, v) => n.put(k, String.valueOf(v))
     }
     mapper.writeValueAsString(n)
@@ -218,32 +207,20 @@ final class KinesisHttpApi(
   override def listShardMetas(streamName: String): Seq[ShardMeta] =
     listShardInfos(streamName).map(_.toMeta)
 
-  /** TRIM_HORIZON iterators start the ordinal position space at 0. An
-    * AT_TIMESTAMP iterator (API completeness; the seam's backends resume
-    * by position, not timestamp) also numbers from 0 — ITS zero is the
-    * timestamp point, a DISTINCT position space the caller owns, so its
-    * pages never write resume anchors (an ordinal resume flooring onto a
-    * timestamp-space anchor would skip records before the resume point). */
-  override def getShardIterator(streamName: String, shardId: String,
-                                atTimestampMs: Option[Long]): String = {
+  /** TRIM_HORIZON iterators start the ordinal position space at 0. */
+  override def getShardIterator(streamName: String, shardId: String): String = {
     metaOf(streamName, shardId) // ensure shard metadata before records flow
-    val (body, anchorSink) = atTimestampMs match {
-      case Some(ts) => (obj("StreamName" -> streamName, "ShardId" -> shardId,
-        "ShardIteratorType" -> "AT_TIMESTAMP", "Timestamp" -> ts / 1000.0),
-        None)
-      case None => (obj("StreamName" -> streamName, "ShardId" -> shardId,
-        "ShardIteratorType" -> "TRIM_HORIZON"),
-        Some(anchorsFor(streamName, shardId)))
-    }
+    val body = obj("StreamName" -> streamName, "ShardId" -> shardId,
+      "ShardIteratorType" -> "TRIM_HORIZON")
     register(
       parseShardIterator(post("Kinesis_20131202.GetShardIterator", body)),
-      IterState(streamName, shardId, nextPos = 0L, anchorSink,
-        lastSeq = None, atTimestampMs = atTimestampMs))
+      IterState(streamName, shardId, nextPos = 0L, anchorsFor(streamName, shardId),
+        lastSeq = None))
   }
 
   override def getShardIteratorAtSequence(streamName: String, shardId: String,
                                           sequence: Long): String = {
-    if (sequence <= 0L) return getShardIterator(streamName, shardId, None)
+    if (sequence <= 0L) return getShardIterator(streamName, shardId)
     metaOf(streamName, shardId)
     val store = anchorsFor(streamName, shardId)
     // Nearest anchor at-or-below the requested position: resume with
@@ -260,8 +237,8 @@ final class KinesisHttpApi(
           "StartingSequenceNumber" -> anchorSeq)
         try register(
           parseShardIterator(post("Kinesis_20131202.GetShardIterator", body)),
-          IterState(streamName, shardId, nextPos = anchorPos, Some(store),
-            lastSeq = Some(anchorSeq), atTimestampMs = None))
+          IterState(streamName, shardId, nextPos = anchorPos, store,
+            lastSeq = Some(anchorSeq)))
         catch {
           // ONLY a genuine position rejection falls back to TRIM_HORIZON
           // (the anchor aged past retention, crossed a reshard, or the
@@ -279,7 +256,7 @@ final class KinesisHttpApi(
                 "were committed, re-counted ordinals are SHIFTED vs the " +
                 "committed positions — records may be skipped; re-seed the " +
                 "query from a fresh checkpoint if exactness is required")
-            getShardIterator(streamName, shardId, None)
+            getShardIterator(streamName, shardId)
         }
       case None =>
         // No anchor anywhere (first contact with this shard, snapshot
@@ -296,7 +273,7 @@ final class KinesisHttpApi(
             "offsets were committed, re-counted ordinals are SHIFTED vs the " +
             "committed positions — records may be skipped; configure " +
             "anchorDir (on by default under a checkpoint) to avoid this path")
-        getShardIterator(streamName, shardId, None)
+        getShardIterator(streamName, shardId)
     }
   }
 
@@ -319,23 +296,17 @@ final class KinesisHttpApi(
     * so this must NOT fall back to TRIM_HORIZON re-enumeration when the
     * lineage has a consumed position. Resume point, in order:
     * `AFTER_SEQUENCE_NUMBER` of the lineage's last-consumed real sequence
-    * (exact — no duplicate, no gap); else the lineage's own start
-    * position (AT_TIMESTAMP point, or TRIM_HORIZON) when nothing was
-    * consumed yet — also exact, `nextPos` is still the start. */
+    * (exact — no duplicate, no gap); else TRIM_HORIZON when nothing was
+    * consumed yet — also exact, `nextPos` is still 0. */
   private def reacquireExpired(st: IterState): String = {
     val body = st.lastSeq match {
       case Some(seq) =>
         obj("StreamName" -> st.streamName, "ShardId" -> st.shardId,
           "ShardIteratorType" -> "AFTER_SEQUENCE_NUMBER",
           "StartingSequenceNumber" -> seq)
-      case None => st.atTimestampMs match {
-        case Some(ts) =>
-          obj("StreamName" -> st.streamName, "ShardId" -> st.shardId,
-            "ShardIteratorType" -> "AT_TIMESTAMP", "Timestamp" -> ts / 1000.0)
-        case None =>
-          obj("StreamName" -> st.streamName, "ShardId" -> st.shardId,
-            "ShardIteratorType" -> "TRIM_HORIZON")
-      }
+      case None =>
+        obj("StreamName" -> st.streamName, "ShardId" -> st.shardId,
+          "ShardIteratorType" -> "TRIM_HORIZON")
     }
     parseShardIterator(post("Kinesis_20131202.GetShardIterator", body))
   }
@@ -370,11 +341,10 @@ final class KinesisHttpApi(
     }
     val nextPos = st.nextPos + page.records.size
     // One anchor per served page: to resume at `nextPos`, continue AFTER
-    // the page's last real sequence. Ordinal-space iterators only —
-    // AT_TIMESTAMP pages (anchors = None) must not write into the resume
-    // space. Eviction + durable snapshotting live in the store.
-    for (store <- st.anchors; last <- page.records.lastOption)
-      store.record(nextPos, last.sequence.toString)
+    // the page's last real sequence. Eviction + durable snapshotting live
+    // in the store.
+    page.records.lastOption.foreach(last =>
+      st.anchors.record(nextPos, last.sequence.toString))
     // the lineage's last-consumed sequence rides every page turn, so a
     // LATER expiry re-acquires exactly after what this page consumed
     val lastSeq = page.records.lastOption
@@ -396,7 +366,7 @@ final class KinesisApiException(val errorType: String, msg: String)
   * through the `backend` option (see [[BackendSpec]]):
   *
   * {{{
-  * spark.readStream.format(KplFileSource.Provider)
+  * spark.readStream.format(KplFileSource.ProviderClass)
   *   .option("backend", classOf[KinesisHttpBackend].getName)
   *   .option("endpoint", "https://kinesis.us-east-1.amazonaws.com")
   *   .option("region", "us-east-1")
@@ -424,16 +394,12 @@ final class KinesisHttpBackend(options: Map[String, String]) extends ShardBacken
       // `anchorDir` is injected by the micro-batch scan as
       // `<checkpointLocation>/graft-anchors` (overridable); anchors then
       // survive process restarts wherever the checkpoint survives.
-      anchorDir = options.get("anchorDir").filter(_.nonEmpty),
-      anchorPersistEvery = options.getOrElse("anchorPersistEvery", "16").toInt,
-      maxAnchorsPerShard =
-        options.getOrElse("maxAnchorsPerShard", "8192").toInt),
+      anchorDir = options.get("anchorDir").filter(_.nonEmpty)),
     options.getOrElse("streamName",
       sys.error("kinesis http backend: missing streamName")),
     pageSize = options.getOrElse("maxRecordsPerFetch", "1000").toInt)
   override def listShards(): Seq[String] = inner.listShards()
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
-  override def latestPosition(shard: String): Long = inner.latestPosition(shard)
   override def latestPosition(shard: String, resumeFrom: Long): Long =
     inner.latestPosition(shard, resumeFrom)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =

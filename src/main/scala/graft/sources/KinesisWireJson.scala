@@ -147,9 +147,9 @@ object KinesisWireJson {
   *    wants a monotonic long per shard. Replay normalizes by subtracting
   *    the shard's first recorded sequence (gaps preserved — Kinesis
   *    sequences are monotonic but NOT dense, per the public API contract).
-  *  - AT_TIMESTAMP / AT_SEQUENCE_NUMBER iterators bisect the recorded pages
-  *    the way the service would position them: first page whose tail
-  *    reaches the requested point.
+  *  - AT_SEQUENCE_NUMBER iterators bisect the recorded pages the way the
+  *    service would position them: first page whose tail reaches the
+  *    requested point.
   *
   * Constructible through [[BackendSpec]]'s reflective path via
   * [[RecordedKinesisBackend]], so the full DSv2 scan — partitions, offsets,
@@ -224,17 +224,8 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
     }
   }
 
-  override def getShardIterator(streamName: String, shardId: String,
-                                atTimestampMs: Option[Long]): String = {
-    val ps = pages.getOrElse(shardId, IndexedSeq.empty)
-    val idx = atTimestampMs match {
-      case None => 0
-      case Some(ts) =>
-        val i = ps.indexWhere(_.records.exists(_.tsMillis >= ts))
-        if (i < 0) ps.length else i
-    }
-    s"$shardId#$idx"
-  }
+  override def getShardIterator(streamName: String, shardId: String): String =
+    s"$shardId#0"
 
   override def getShardIteratorAtSequence(streamName: String, shardId: String,
                                           sequence: Long): String = {
@@ -271,7 +262,6 @@ final class RecordedKinesisBackend(options: Map[String, String]) extends ShardBa
     pageSize = options.getOrElse("maxRecordsPerFetch", "100").toInt)
   override def listShards(): Seq[String] = inner.listShards()
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
-  override def latestPosition(shard: String): Long = inner.latestPosition(shard)
   override def latestPosition(shard: String, resumeFrom: Long): Long =
     inner.latestPosition(shard, resumeFrom)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =

@@ -23,8 +23,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *    one reader per Kinesis shard; the reference reads only shard '0'
   *    (`kinesisReader/index.js:77`), this source generalizes to N;
   *  - offsets are per-shard record sequence numbers, checkpointed as JSON;
-  *  - `startingTimestampMs` reproduces the AT_TIMESTAMP iterator (O5's
-  *    time pushdown into the scan, `kinesisReader/index.js:78-81`);
   *  - `maxRecordsPerFetch` (default 100, the reference's page size at
   *    `kinesisReader/index.js:22`) feeds admission control, so
   *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2);
@@ -210,15 +208,16 @@ object KplShardFiles {
     offsetsFor(new java.io.File(dir, shardFile)).length.toLong
 
   /** Decode ONLY frames [from, until) of a shard file: seek to the
-    * indexed offset, read the slice sequentially. */
-  def readSlice(dir: String, shardFile: String, from: Long, until: Long): Seq[Frame] = {
+    * indexed offset, read the slice sequentially. Each record's `sequence`
+    * is its frame index in the file. */
+  def readSlice(dir: String, shardFile: String, from: Long, until: Long): Seq[ShardRecord] = {
     val f = new java.io.File(dir, shardFile)
     val offs = offsetsFor(f)
     val lo = math.min(math.max(from, 0L), offs.length.toLong).toInt
     val hi = math.min(math.max(until, lo.toLong), offs.length.toLong).toInt
     if (hi == lo) return Seq.empty
     val raf = new java.io.RandomAccessFile(f, "r")
-    val buf = ArrayBuffer.empty[Frame]
+    val buf = ArrayBuffer.empty[ShardRecord]
     try {
       raf.seek(offs(lo))
       val in = new DataInputStream(new java.io.BufferedInputStream(
@@ -228,7 +227,7 @@ object KplShardFiles {
         val ts = in.readLong()
         val pk = new Array[Byte](in.readInt()); in.readFully(pk)
         val data = new Array[Byte](in.readInt()); in.readFully(data)
-        buf += Frame(ts, new String(pk, UTF_8), data)
+        buf += ShardRecord(i.toLong, ts, new String(pk, UTF_8), data)
         i += 1
       }
     } finally raf.close()
@@ -265,12 +264,11 @@ class KplFileTable(props: Map[String, String]) extends Table with SupportsRead {
 
 class KplFileScan(spec: BackendSpec, options: CaseInsensitiveStringMap)
     extends ScanBuilder with Scan {
-  private val startTsMs = Option(options.get("startingTimestampMs")).map(_.toLong).getOrElse(0L)
   private val maxPerFetch = Option(options.get("maxRecordsPerFetch")).map(_.toInt).getOrElse(100)
 
   override def build(): Scan = this
   override def readSchema(): StructType = KplFileSource.Schema
-  override def description(): String = s"KplScan(backend=${spec.kind}, startTsMs=$startTsMs)"
+  override def description(): String = s"KplScan(backend=${spec.kind})"
 
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream = {
     // Durable resume anchors for the live transport ride the checkpoint:
@@ -283,13 +281,13 @@ class KplFileScan(spec: BackendSpec, options: CaseInsensitiveStringMap)
       if (spec.options.contains("anchorDir")) spec
       else spec.copy(options =
         spec.options.updated("anchorDir", s"$checkpointLocation/graft-anchors"))
-    new KplFileMicroBatchStream(withAnchors, startTsMs, maxPerFetch)
+    new KplFileMicroBatchStream(withAnchors, maxPerFetch)
   }
 
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
       spec.create().listShards().map { shard =>
-        KplShardPartition(spec, shard, 0L, Long.MaxValue, startTsMs): InputPartition
+        KplShardPartition(spec, shard, 0L, Long.MaxValue): InputPartition
       }.toArray
     override def createReaderFactory(): PartitionReaderFactory = new KplShardReaderFactory
   }
@@ -309,26 +307,29 @@ object KplShardOffsets {
     KplShardOffsets(Entry.findAllMatchIn(json).map(m => m.group(1) -> m.group(2).toLong).toMap)
 }
 
-class KplFileMicroBatchStream(spec: BackendSpec, startTsMs: Long, maxPerFetch: Int)
+class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
 
   private val backend = spec.create() // driver-side instance (offset queries)
 
-  private def scanShardSizes(): Map[String, Long] =
-    backend.listShards().map(s => s -> backend.latestPosition(s)).toMap
+  /** Each shard's backlog end, probed with its committed offset as the
+    * resume hint ([[ShardBackend.latestPosition]]). */
+  private def backlogEnds(metas: Seq[ShardMeta], committed: String => Long): Map[String, Long] =
+    metas.map(m => m.shardId -> backend.latestPosition(m.shardId, committed(m.shardId))).toMap
 
   /** Under Trigger.AvailableNow, the backlog end is pinned here so the query
     * pages up to a fixed point and stops — the reference's catch-up
     * termination check (`MillisBehindLatest === 0`, O2). */
   private var pinnedEnd: Option[Map[String, Long]] = None
-  override def prepareForTriggerAvailableNow(): Unit = { pinnedEnd = Some(scanShardSizes()) }
+  override def prepareForTriggerAvailableNow(): Unit =
+    pinnedEnd = Some(backlogEnds(backend.shardMetas(), _ => 0L))
 
-  private def shardSizes(): Map[String, Long] = pinnedEnd.getOrElse(scanShardSizes())
-
+  /** Every listed shard at position 0; no backlog probe is needed. */
   override def initialOffset(): Offset =
-    KplShardOffsets(shardSizes().map { case (s, _) => s -> 0L })
+    KplShardOffsets(backend.listShards().map(_ -> 0L).toMap)
 
-  override def latestOffset(): Offset = KplShardOffsets(shardSizes())
+  override def latestOffset(): Offset = throw new UnsupportedOperationException(
+    "latestOffset(Offset, ReadLimit) should be called instead of this method")
 
   override def getDefaultReadLimit: ReadLimit = ReadLimit.maxRows(maxPerFetch.toLong)
 
@@ -351,9 +352,7 @@ class KplFileMicroBatchStream(spec: BackendSpec, startTsMs: Long, maxPerFetch: I
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startOff = start.asInstanceOf[KplShardOffsets].offsets.withDefaultValue(0L)
     val metas = backend.shardMetas()
-    val sizes = pinnedEnd.getOrElse(
-      metas.map(m => m.shardId ->
-        backend.latestPosition(m.shardId, startOff(m.shardId))).toMap)
+    val sizes = pinnedEnd.getOrElse(backlogEnds(metas, startOff))
     val admitted = ReshardAdmission.admissible(
       metas, startOff, sizes.withDefaultValue(0L))
     metas.foreach { m =>
@@ -387,7 +386,7 @@ class KplFileMicroBatchStream(spec: BackendSpec, startTsMs: Long, maxPerFetch: I
     val e = end.asInstanceOf[KplShardOffsets].offsets
     e.toSeq.sorted.collect {
       case (shard, until) if until > s(shard) =>
-        KplShardPartition(spec, shard, s(shard), until, startTsMs): InputPartition
+        KplShardPartition(spec, shard, s(shard), until): InputPartition
     }.toArray
   }
 
@@ -396,19 +395,14 @@ class KplFileMicroBatchStream(spec: BackendSpec, startTsMs: Long, maxPerFetch: I
   override def stop(): Unit = ()
 }
 
-case class KplShardPartition(
-    spec: BackendSpec, shard: String, from: Long, until: Long, startTsMs: Long)
+case class KplShardPartition(spec: BackendSpec, shard: String, from: Long, until: Long)
     extends InputPartition
 
 class KplShardReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[KplShardPartition]
     new PartitionReader[InternalRow] {
-      // AT_TIMESTAMP pushdown: frames before startTsMs are skipped at the
-      // source, not post-filtered (mirrors the shard-iterator semantics).
-      private val records = p.spec.create().read(p.shard, p.from, p.until)
-        .filter(_.tsMillis >= p.startTsMs)
-        .iterator
+      private val records = p.spec.create().read(p.shard, p.from, p.until).iterator
       private var current: ShardRecord = _
 
       override def next(): Boolean = {

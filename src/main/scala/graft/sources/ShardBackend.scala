@@ -89,16 +89,16 @@ trait ShardBackend extends Serializable {
   def shardMetas(): Seq[ShardMeta] =
     listShards().map(ShardMeta(_, Nil, closed = false))
 
-  def latestPosition(shard: String): Long
+  /** The shard's backlog end, with a resume hint — the caller's last
+    * committed offset. Backends whose backlog probe must PAGE (no metadata
+    * answer) resume the drain from the hint instead of the shard head, so a
+    * bounded probe still advances trigger-over-trigger on a shard whose
+    * retained backlog exceeds one probe's page budget. Positional stores
+    * answer in O(1) and ignore the hint. */
+  def latestPosition(shard: String, resumeFrom: Long): Long
 
-  /** [[latestPosition]] with a resume hint — the caller's last committed
-    * offset. Backends whose backlog probe must PAGE (no metadata answer)
-    * resume the drain from the hint instead of the shard head, so a bounded
-    * probe still advances trigger-over-trigger on a shard whose retained
-    * backlog exceeds one probe's page budget. Positional stores answer in
-    * O(1) and ignore the hint. */
-  def latestPosition(shard: String, resumeFrom: Long): Long =
-    latestPosition(shard)
+  /** [[latestPosition]] probed from the shard head (no committed offset). */
+  final def latestPosition(shard: String): Long = latestPosition(shard, 0L)
 
   def read(shard: String, from: Long, until: Long): Seq[ShardRecord]
 }
@@ -113,15 +113,13 @@ final class FileShardBackend(path: String) extends ShardBackend {
     val side = KplShardFiles.readMetas(path)
     listShards().map(id => side.getOrElse(id, ShardMeta(id, Nil, closed = false)))
   }
-  override def latestPosition(shard: String): Long =
+  override def latestPosition(shard: String, resumeFrom: Long): Long =
     KplShardFiles.frameCount(path, shard)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     // Slice-indexed read: a micro-batch decodes ONLY its [from, until)
     // frames (one seek + sequential slice), not the whole shard file —
     // without this a deep catch-up is O(backlog²) across the drain.
-    KplShardFiles.readSlice(path, shard, from, until).zipWithIndex
-      .map { case (f, i) =>
-        ShardRecord(math.max(from, 0L) + i, f.tsMillis, f.partitionKey, f.data) }
+    KplShardFiles.readSlice(path, shard, from, until)
 }
 
 /** Serializable backend selector carried inside every input partition and
@@ -171,10 +169,10 @@ trait KinesisDataApi extends Serializable {
   def listShardMetas(streamName: String): Seq[ShardMeta] =
     listShards(streamName).map(ShardMeta(_, Nil, closed = false))
 
-  /** GetShardIterator. `atTimestampMs = None` ↔ TRIM_HORIZON, `Some(ts)` ↔
-    * AT_TIMESTAMP (the reference's iterator choice, index.js:78-81). */
-  def getShardIterator(streamName: String, shardId: String,
-                       atTimestampMs: Option[Long]): String
+  /** GetShardIterator at TRIM_HORIZON (the shard's readable start). The
+    * reference's AT_TIMESTAMP lookback is a plan filter here
+    * ([[graft.api.RecordsQuery.lookback]]), not an iterator type. */
+  def getShardIterator(streamName: String, shardId: String): String
 
   /** GetRecords page: (records, nextIterator, millisBehindLatest).
     * `nextIterator = None` ↔ a closed shard; `millisBehindLatest == 0` is
@@ -185,12 +183,12 @@ trait KinesisDataApi extends Serializable {
   /** GetShardIterator with AT_SEQUENCE_NUMBER positioning, so a range read
     * starts paging AT `sequence` instead of draining the shard from
     * TRIM_HORIZON on every micro-batch (which would be O(shard length) per
-    * read). Default falls back to TRIM_HORIZON for adapters that only
-    * implement the timestamp path — correct, just not cheap — and
+    * read). Default falls back to TRIM_HORIZON for adapters without
+    * sequence positioning — correct, just not cheap — and
     * [[KinesisShardBackend.read]] still filters to the requested range. */
   def getShardIteratorAtSequence(streamName: String, shardId: String,
                                  sequence: Long): String =
-    getShardIterator(streamName, shardId, None)
+    getShardIterator(streamName, shardId)
 
   /** Shard-metadata answer for the backlog end (DescribeStream /
     * EndingSequenceNumber style): `Some(lastSequence + 1)` when the adapter
@@ -232,15 +230,12 @@ final class KinesisShardBackend(
     * the remote service catching up. Under-reporting here is safe (a later
     * trigger reads the rest); a tripped page cap is logged so a persistent
     * stall is observable. */
-  override def latestPosition(shard: String): Long =
-    latestPosition(shard, 0L)
-
   override def latestPosition(shard: String, resumeFrom: Long): Long =
     api.latestSequence(streamName, shard).getOrElse {
       var it: Option[String] = Some(
         if (resumeFrom > 0L)
           api.getShardIteratorAtSequence(streamName, shard, resumeFrom)
-        else api.getShardIterator(streamName, shard, None))
+        else api.getShardIterator(streamName, shard))
       // An adapter's fallback iterator may start before resumeFrom (the
       // default getShardIteratorAtSequence is TRIM_HORIZON); the reported
       // position must never regress below what the caller already committed.

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.time.Instant
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.api.RecordsQuery
@@ -14,18 +16,17 @@ import graft.sources.KplFileSource
   * a live tail, which the reference cannot do. */
 object RecordsStream {
 
-  /** Open the envelope stream for a validated query: the duration clamp
-    * becomes the source's starting timestamp (O5 pushdown). */
+  /** Open the envelope stream for a validated query, behind the batch
+    * plan's [[RecordsQuery.lookback]] filter: the lookback is one plan
+    * filter on both paths, and the source is not told the start. */
   def envelopeStream(
       spark: SparkSession,
       path: String,
       q: RecordsQuery.Query,
       nowMs: Long): DataFrame =
-    spark.readStream
-      .format(KplFileSource.ProviderClass)
-      .option("path", path)
-      .option("startingTimestampMs", nowMs - q.durationMinutes * 60000L)
-      .load()
+    RecordsQuery.lookback(
+      spark.readStream.format(KplFileSource.ProviderClass).option("path", path).load(),
+      q, Instant.ofEpochMilli(nowMs))
 
   /** Full streaming records pipeline: the batch plan's
     * [[RecordsQuery.pipeline]] over the stream. */

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.ScalaUDF
-import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+import org.apache.spark.sql.catalyst.expressions.{Literal, ScalaUDF}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, LogicalPlan}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -66,6 +66,17 @@ class RecordsPipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
   private def udfs(plan: LogicalPlan): Seq[ScalaUDF] =
     plan.flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
 
+  /** Operator names above the leaf relation, top down. */
+  private def operators(plan: LogicalPlan): Seq[String] =
+    plan.collect { case p if p.children.nonEmpty => p.nodeName }
+
+  /** The literals of every Filter on the arrival timestamp. */
+  private def lookbacks(plan: LogicalPlan): Seq[Seq[Any]] =
+    plan.collect {
+      case f: Filter if f.condition.references.exists(_.name == "approximateArrivalTimestamp") =>
+        f.condition.collect { case l: Literal => l.value }
+    }
+
   test("batch plan and AvailableNow drain return the same JSON multiset") {
     val dir = store()
     for ((q, expected) <- Seq(
@@ -84,10 +95,17 @@ class RecordsPipelineSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("batch and streaming records plans hold one KplExplode Generate and no ScalaUDF") {
     val dir = store()
     val q = query("tenantId" -> "7")
-    for (plan <- Seq(batch(dir, q), stream(dir, q)).map(_.queryExecution.analyzed)) {
+    val plans = Seq(batch(dir, q), stream(dir, q)).map(_.queryExecution.analyzed)
+    for (plan <- plans) {
       generators(plan).map(_.generator.getClass) shouldBe Seq(classOf[KplExplode])
       udfs(plan) shouldBe empty
     }
+    // One lookback, owned by the plan: the same operators over either
+    // leaf, with exactly one Filter on the arrival timestamp at minute 950.
+    val Seq(batchPlan, streamPlan) = plans
+    operators(streamPlan) shouldBe operators(batchPlan)
+    lookbacks(batchPlan) shouldBe Seq(Seq(950L * 60000L * 1000L))
+    lookbacks(streamPlan) shouldBe lookbacks(batchPlan)
   }
 
   test("planning /records or ingest in a new session installs no optimizer rule") {

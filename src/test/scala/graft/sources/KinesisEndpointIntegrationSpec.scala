@@ -101,7 +101,7 @@ class KinesisEndpointIntegrationSpec extends AnyFunSuite with Matchers
     val shard = a.listShards(streamName).head
     // expiry BEFORE anything was consumed: the transport re-acquires from
     // the lineage start (nothing to lose)
-    val it0 = a.getShardIterator(streamName, shard, None)
+    val it0 = a.getShardIterator(streamName, shard)
     Thread.sleep(ttl + 300L)
     val (p1, next1, _) = a.getRecords(it0, 2)
     p1.map(_.sequence) shouldBe Seq(0L, 1L)

@@ -137,10 +137,6 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
         val recs = shardRecords(shardId)
         val idx = field("ShardIteratorType").get match {
           case "TRIM_HORIZON" => 0
-          case "AT_TIMESTAMP" =>
-            val tsMs = math.round(num("Timestamp").get.toDouble * 1000.0)
-            val i = recs.indexWhere(_._2 >= tsMs)
-            if (i < 0) recs.length else i
           case "AFTER_SEQUENCE_NUMBER" =>
             val seq = BigInt(field("StartingSequenceNumber").get)
             // the real service rejects unknown positions — exercised by
@@ -317,27 +313,12 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     iterRequests.asScala.map(_._2) should contain("TRIM_HORIZON")
   }
 
-  test("AT_TIMESTAMP pages write no ordinal resume anchors (distinct position space)") {
-    KinesisAnchorStore.dropInMemory()
-    val api = newApi()
-    // timestamp iterator positioned at the SECOND record: its ordinals
-    // 0.. are timestamp-relative — were its page anchors written into the
-    // ordinal resume space, the positioned read below would floor onto a
-    // far-ahead real sequence and silently skip ordinal 2.
-    val it = api.getShardIterator(stream, "shardId-000000000000",
-      Some(1441215411102L))
-    val (tsRecords, _, _) = api.getRecords(it, 10)
-    tsRecords.map(_.partitionKey) shouldBe Seq("partitionKey-1", "pk-agg")
-    val be = new KinesisShardBackend(api, stream, pageSize = 2)
-    be.read("shardId-000000000000", 2L, 3L).map(_.partitionKey) shouldBe Seq("pk-agg")
-  }
-
   test("expired iterator mid-drain: re-acquire AFTER the last consumed sequence — no duplicate, no gap") {
     KinesisAnchorStore.dropInMemory()
     iterRequests.clear()
     val api = newApi()
     // first page consumed normally (records 0,1 at pageSize 2) ...
-    val it0 = api.getShardIterator(stream, "shardId-000000000000", None)
+    val it0 = api.getShardIterator(stream, "shardId-000000000000")
     val (p1, next1, _) = api.getRecords(it0, 2)
     p1.map(_.sequence) shouldBe Seq(0L, 1L)
     // ... then the server expires the continuation token (the 5-minute
@@ -360,20 +341,12 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
   test("expired iterator before any record was consumed: re-acquire from the lineage start") {
     KinesisAnchorStore.dropInMemory()
     val api = newApi()
-    // ordinal lineage, nothing consumed → TRIM_HORIZON re-acquire is
-    // exact (nextPos is still 0)
-    val it = api.getShardIterator(stream, "shardId-000000000000", None)
+    // nothing consumed → TRIM_HORIZON re-acquire is exact (nextPos is
+    // still 0)
+    val it = api.getShardIterator(stream, "shardId-000000000000")
     expireOnce.set(true)
     val (recs, _, _) = api.getRecords(it, 10)
     recs.map(_.sequence) shouldBe Seq(0L, 1L, 2L)
-    // AT_TIMESTAMP lineage, nothing consumed → re-acquire at the SAME
-    // timestamp point (its distinct position space stays aligned)
-    val itTs = api.getShardIterator(stream, "shardId-000000000000",
-      Some(1441215411102L))
-    expireOnce.set(true)
-    val (tsRecs, _, _) = api.getRecords(itTs, 10)
-    tsRecs.map(_.partitionKey) shouldBe Seq("partitionKey-1", "pk-agg")
-    tsRecs.map(_.sequence) shouldBe Seq(0L, 1L)
   }
 
   test("full DSv2 batch scan + de-aggregation through the HTTP backend; every request SigV4-valid") {

@@ -17,18 +17,8 @@ class StubKinesisApi(protected val data: Map[String, Seq[ShardRecord]]) extends 
 
   override def listShards(streamName: String): Seq[String] = data.keys.toSeq.sorted
 
-  override def getShardIterator(streamName: String, shardId: String,
-                                atTimestampMs: Option[Long]): String = {
-    val records = data(shardId)
-    val from = atTimestampMs match {
-      case None => 0
-      case Some(ts) => records.indexWhere(_.tsMillis >= ts) match {
-        case -1 => records.length
-        case i  => i
-      }
-    }
-    s"$shardId/$from"
-  }
+  override def getShardIterator(streamName: String, shardId: String): String =
+    s"$shardId/0"
 
   override def getShardIteratorAtSequence(streamName: String, shardId: String,
                                           sequence: Long): String = {
@@ -57,6 +47,8 @@ object InMemoryTestBackend {
   /** Static fixture the reflective backend serves (local-mode executors
     * share the JVM, so the test can seed it directly). */
   @volatile var data: Map[String, Seq[ShardRecord]] = Map.empty
+  /** `latestPosition` calls across all instances. */
+  val probes = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
 /** A [[ShardBackend]] loadable by class name through [[BackendSpec]] —
@@ -64,8 +56,10 @@ object InMemoryTestBackend {
   * whole DSv2 read path. */
 class InMemoryTestBackend(options: Map[String, String]) extends ShardBackend {
   override def listShards(): Seq[String] = InMemoryTestBackend.data.keys.toSeq.sorted
-  override def latestPosition(shard: String): Long =
+  override def latestPosition(shard: String, resumeFrom: Long): Long = {
+    InMemoryTestBackend.probes.incrementAndGet()
     InMemoryTestBackend.data(shard).length.toLong
+  }
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     InMemoryTestBackend.data(shard).filter(r => r.sequence >= from && r.sequence < until)
 }
@@ -122,8 +116,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     // alone would not terminate; the total-page bound must.
     val live = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String,
-                                    atTimestampMs: Option[Long]): String = "0"
+      override def getShardIterator(streamName: String, shardId: String): String = "0"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) = {
         val pos = iterator.toLong
@@ -155,7 +148,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
       Map("shardId-000" -> (0L until 100L).map(i => rec(i, 1000 + i, s"a$i")))) {
       override def getShardIteratorAtSequence(streamName: String, shardId: String,
                                               sequence: Long): String =
-        getShardIterator(streamName, shardId, None) // TRIM_HORIZON fallback
+        getShardIterator(streamName, shardId) // TRIM_HORIZON fallback
     }
     val backend2 = new KinesisShardBackend(noSeqIterator, "s", pageSize = 10, maxPagesPerCall = 2)
     backend2.latestPosition("shardId-000", 50L) should be >= 50L
@@ -164,8 +157,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("a throttled stream (endless empty pages while behind) cannot spin the drain loop") {
     val throttled = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String,
-                                    atTimestampMs: Option[Long]): String = "it"
+      override def getShardIterator(streamName: String, shardId: String): String = "it"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) =
         (Seq.empty, Some("it"), 999L) // never empty-handed AND never caught up
@@ -180,8 +172,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("a non-advancing adapter (repeating pages) fails a range read rather than truncating") {
     val looping = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String,
-                                    atTimestampMs: Option[Long]): String = "it"
+      override def getShardIterator(streamName: String, shardId: String): String = "it"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) =
         // same page forever, never caught up: sequence progress stalls
@@ -196,8 +187,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     // 500-record range. Progress resets the guard, so this must succeed.
     val dribble = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String,
-                                    atTimestampMs: Option[Long]): String = "0"
+      override def getShardIterator(streamName: String, shardId: String): String = "0"
       override def getShardIteratorAtSequence(streamName: String, shardId: String,
                                               sequence: Long): String = sequence.toString
       override def getRecords(iterator: String, limit: Int)
@@ -238,7 +228,10 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     val full = KplShardFiles.read(dir, f)
     KplShardFiles.frameCount(dir, f) shouldBe 23L
     for (from <- Seq(0, 1, 7, 22, 23); until <- Seq(0, 1, 8, 23, 99)) {
-      val got = KplShardFiles.readSlice(dir, f, from.toLong, until.toLong)
+      val slice = KplShardFiles.readSlice(dir, f, from.toLong, until.toLong)
+      // each record's sequence is its frame index in the file
+      slice.map(_.sequence) shouldBe (from until math.min(until, 23)).map(_.toLong)
+      val got = slice
         .map(fr => (fr.tsMillis, fr.partitionKey, new String(fr.data, UTF_8)))
       val want = full.slice(from, until)
         .map(fr => (fr.tsMillis, fr.partitionKey, new String(fr.data, UTF_8)))
@@ -385,9 +378,16 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
       ("m0", "shardId-002"), ("m1", "shardId-002"))
   }
 
-  test("AT_TIMESTAMP iterator maps onto the stub (reference O5 pushdown analog)") {
-    val api = new StubKinesisApi(shardData)
-    api.getShardIterator("s", "shardId-000", Some(1010L)) shouldBe "shardId-000/10"
-    api.getShardIterator("s", "shardId-000", None) shouldBe "shardId-000/0"
+  test("stream start-up lists shards without probing any backlog") {
+    InMemoryTestBackend.data = shardData
+    InMemoryTestBackend.probes.set(0)
+    val stream = new KplFileMicroBatchStream(
+      BackendSpec(classOf[InMemoryTestBackend].getName, Map.empty), maxPerFetch = 100)
+    stream.initialOffset() shouldBe
+      KplShardOffsets(Map("shardId-000" -> 0L, "shardId-001" -> 0L))
+    InMemoryTestBackend.probes.get() shouldBe 0
+    // the backlog end is probed only once offsets are planned
+    stream.prepareForTriggerAvailableNow()
+    InMemoryTestBackend.probes.get() shouldBe 2
   }
 }

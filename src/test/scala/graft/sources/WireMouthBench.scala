@@ -145,10 +145,6 @@ object WireMouthBench {
       (wall, stageWall.toMap, manifest)
     }
 
-    // startingTimestampMs=0 on BOTH paths: drain each backlog from its
-    // horizon, so both drains admit the identical aggregate sequence from
-    // position 0 and batch boundaries line up
-
     // Throwaway WARM-UP drain (file path, untimed): codegen, classloading,
     // shuffle machinery, and the parquet reader all initialize on the
     // first drain of this JVM — charging that to whichever path runs
@@ -156,7 +152,6 @@ object WireMouthBench {
     // the transport seam). After this, both timed drains run warm.
     drain("warmup", Map(
       "path" -> fileDir,
-      "startingTimestampMs" -> "0",
       "maxRecordsPerFetch" -> FetchLimit))
 
     val (wireWall, wireStages, wireManifest) = drain("wire", Map(
@@ -166,11 +161,9 @@ object WireMouthBench {
       "streamName" -> streamName,
       "accessKeyId" -> "x",
       "secretAccessKey" -> "x",
-      "startingTimestampMs" -> "0",
       "maxRecordsPerFetch" -> FetchLimit))
     val (fileWall, fileStages, fileManifest) = drain("file", Map(
       "path" -> fileDir,
-      "startingTimestampMs" -> "0",
       "maxRecordsPerFetch" -> FetchLimit))
 
     val verdictsEqual = wireManifest == fileManifest

@@ -114,8 +114,7 @@ class KinesisMouthSpec extends AnyFunSuite with Matchers with SparkSpec {
       failAfterStage: Long => Int = _ => Int.MaxValue): Option[String] = {
     val q = CrawlIngest.admissionFromKinesis(
       spark,
-      Map("path" -> srcDir, "maxRecordsPerFetch" -> "2",
-        "startingTimestampMs" -> "0"),
+      Map("path" -> srcDir, "maxRecordsPerFetch" -> "2"),
       dedupDir, ivfDir, vDir, ck,
       extractMarkup = true, failAfterStage = failAfterStage)
     try { q.awaitTermination(); None }

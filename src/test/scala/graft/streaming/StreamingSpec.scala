@@ -533,14 +533,6 @@ class StreamingSpec extends AnyFunSuite with Matchers with SparkSpec {
       Seq("shard-00000", "shard-00001")
   }
 
-  test("AT_TIMESTAMP pushdown skips frames before the starting position") {
-    val dir = Files.createTempDirectory("kplsrc").toString
-    writeFixtures(dir)
-    val df = spark.read.format(KplFileSource.ProviderClass)
-      .option("path", dir).option("startingTimestampMs", 900000L).load()
-    df.count() shouldBe 2 // only the t=20min and t=30min frames
-  }
-
   test("streaming records pipeline: deaggregate + decode over AvailableNow") {
     import spark.implicits._
     val dir = Files.createTempDirectory("kplsrc").toString
