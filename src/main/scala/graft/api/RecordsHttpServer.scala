@@ -3,8 +3,11 @@ package graft.api
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.time.Instant
+import java.util.concurrent.{ArrayBlockingQueue, ConcurrentHashMap, Future, RejectedExecutionException, ScheduledFuture, ScheduledThreadPoolExecutor, ThreadFactory, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong}
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.DataFrame
 
 /** HTTP binding of the `GET /records` surface — the reference's primary
@@ -20,6 +23,26 @@ import org.apache.spark.sql.DataFrame
   *    (`app/server/index.js:65-72`).
   *  - any other path → 404 (the Express default for an unmatched route).
   *
+  * Serving. The JDK dispatch thread parses each request and answers the
+  * cheap cases (404, the browser page, a validation 400) itself. A valid
+  * `/records` request is a call: it runs on one of [[Workers]] pool threads
+  * (one per core), waiting in a queue of at most [[QueueDepth]] calls, so
+  * concurrent clients are served concurrently and none is buffered
+  * without bound. Every call is answered exactly once:
+  *
+  *  - pool and queue full → 503 `{"error":"Service Unavailable","reason":"overloaded"}`,
+  *    at once, on the dispatch thread.
+  *  - not answered [[DeadlineMs]] after admission (queue wait included) →
+  *    504 `{"error":"Gateway Timeout","reason":"deadline","deadlineMs":5000}`.
+  *    The call's Spark jobs carry its own job tag; the deadline cancels
+  *    them by that tag, interrupting their tasks, and interrupts the
+  *    worker, so a hung backend read frees its cores and its worker.
+  *    (The tag is a `SparkContext` job tag: `SparkSession.interruptTag`
+  *    only finds tags that the calling thread added, and the deadline
+  *    fires on another thread.)
+  *  - [[stop]] → 503 `{"error":"Service Unavailable","reason":"stopping"}`
+  *    for every call still open, whose jobs are cancelled the same way.
+  *
   * The response body is the reference-parity bounded echo
   * ([[RecordsQuery.toJsonArray]]); a production deployment sinks the same
   * plan with `df.write` / `writeStream` instead of buffering it through an
@@ -31,18 +54,39 @@ final class RecordsHttpServer(
     envelope: String => DataFrame,
     port: Int = 0,
     now: () => Instant = () => Instant.now()) {
+  import RecordsHttpServer._
 
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   server.createContext("/", new HttpHandler {
     override def handle(ex: HttpExchange): Unit = handleSafely(ex)
   })
-  server.setExecutor(null) // serve on the dispatch thread; tests + parity only
+  // The dispatch thread only parses and routes; calls run on `workers`.
+  server.setExecutor(null)
+
+  // Thread names carry the bound port, e.g. `records-4000-worker-1`.
+  private val threadPrefix = s"records-${server.getAddress.getPort}"
+  private val workers = new ThreadPoolExecutor(Workers, Workers, 0L, TimeUnit.MILLISECONDS,
+    new ArrayBlockingQueue[Runnable](QueueDepth), daemonThreads(s"$threadPrefix-worker"))
+  private val deadlines =
+    new ScheduledThreadPoolExecutor(1, daemonThreads(s"$threadPrefix-deadline"))
+  deadlines.setRemoveOnCancelPolicy(true)
+  private val calls = ConcurrentHashMap.newKeySet[Call]()
 
   /** Start listening; returns the bound port (useful with port=0). */
   def start(): Int = { server.start(); server.getAddress.getPort }
 
-  def stop(): Unit = server.stop(0)
+  /** Refuse new calls, answer and cancel the open ones, then release the
+    * socket and every pool thread. */
+  def stop(): Unit = {
+    workers.shutdown()
+    calls.forEach(_.expire(503, Stopping))
+    server.stop(0)
+    workers.shutdownNow()
+    deadlines.shutdownNow()
+    workers.awaitTermination(DeadlineMs, TimeUnit.MILLISECONDS)
+    deadlines.awaitTermination(DeadlineMs, TimeUnit.MILLISECONDS)
+  }
 
   private def handleSafely(ex: HttpExchange): Unit =
     try route(ex)
@@ -50,8 +94,7 @@ final class RecordsHttpServer(
       case e: Throwable =>
         // e.g. malformed percent-encoding in the query string: answer with
         // the scan-failure error shape rather than dropping the connection.
-        try respond(ex, 400,
-          s"""{"badRequest":true,"error":${jsonString(e.toString)}}""")
+        try respond(ex, 400, scanFailure(e))
         catch { case _: Throwable => ex.close() }
     }
 
@@ -69,22 +112,74 @@ final class RecordsHttpServer(
     else if (ex.getRequestURI.getPath != "/records" ||
         !Set("GET", "HEAD")(ex.getRequestMethod))
       respond(ex, 404, """{"error":"Not Found"}""")
-    else {
-      val params = parseQuery(ex.getRequestURI.getRawQuery)
-      RecordsQuery.validate(params) match {
+    else
+      RecordsQuery.validate(parseQuery(ex.getRequestURI.getRawQuery)) match {
         case Left(err) => respond(ex, 400, err.toJson)
-        case Right(q) =>
-          try {
-            val df = RecordsQuery.plan(envelope(q.streamName), q, now())
-            respond(ex, 200, RecordsQuery.toJsonArray(df))
-          } catch {
-            case e: Throwable =>
-              // Scan-failure shape, `app/server/index.js:65-72`.
-              respond(ex, 400,
-                s"""{"badRequest":true,"error":${jsonString(e.toString)}}""")
-          }
+        case Right(q) => admit(new Call(ex, q))
       }
+
+  private def admit(call: Call): Unit = {
+    calls.add(call)
+    try {
+      call.deadline = deadlines.schedule(
+        (() => call.expire(504, TimedOut)): Runnable, DeadlineMs, TimeUnit.MILLISECONDS)
+      call.worker = workers.submit(call)
+    } catch {
+      case _: RejectedExecutionException =>
+        call.expire(503, if (workers.isShutdown) Stopping else Overloaded)
     }
+  }
+
+  /** One admitted `/records` request: its Spark job tag, and its exchange,
+    * answered once — by the worker, the deadline, overload or [[stop]]. */
+  private final class Call(ex: HttpExchange, q: RecordsQuery.Query) extends Runnable {
+    private val tag = s"graft-records-${callIds.incrementAndGet()}"
+    private val answered = new AtomicBoolean(false)
+    @volatile private var expired = false
+    @volatile private var context: SparkContext = _
+    @volatile var deadline: ScheduledFuture[_] = _
+    @volatile var worker: Future[_] = _
+
+    private def answer(status: Int, body: String): Boolean =
+      answered.compareAndSet(false, true) && {
+        try respond(ex, status, body)
+        catch { case _: Throwable => ex.close() }
+        true
+      }
+
+    def run(): Unit =
+      try {
+        val df = RecordsQuery.plan(envelope(q.streamName), q, now())
+        val sc = df.sparkSession.sparkContext
+        sc.addJobTag(tag)
+        sc.setInterruptOnCancel(true)
+        context = sc
+        try { if (!expired) answer(200, RecordsQuery.toJsonArray(df)) }
+        finally {
+          // A job that started after the deadline fired is cancelled here.
+          if (expired) sc.cancelJobsWithTag(tag)
+          sc.removeJobTag(tag)
+        }
+      } catch {
+        // Scan-failure shape, `app/server/index.js:65-72`.
+        case e: Throwable => answer(400, scanFailure(e))
+      } finally close()
+
+    /** Answer with an error unless already answered, and cancel the work. */
+    def expire(status: Int, body: String): Unit = {
+      expired = true
+      if (answer(status, body)) {
+        Option(context).foreach(_.cancelJobsWithTag(tag))
+        Option(worker).foreach(_.cancel(true))
+      }
+      close()
+    }
+
+    private def close(): Unit = {
+      Option(deadline).foreach(_.cancel(false))
+      calls.remove(this)
+    }
+  }
 
   /** Last-one-wins query-string parse (no params → empty map). */
   private def parseQuery(raw: String): Map[String, String] =
@@ -96,6 +191,9 @@ final class RecordsHttpServer(
         else URLDecoder.decode(kv.substring(0, i), UTF_8) ->
           URLDecoder.decode(kv.substring(i + 1), UTF_8)
       }.toMap
+
+  private def scanFailure(e: Throwable): String =
+    s"""{"badRequest":true,"error":${jsonString(e.toString)}}"""
 
   private def jsonString(s: String): String =
     "\"" + s.flatMap {
@@ -126,5 +224,34 @@ final class RecordsHttpServer(
       try os.write(bytes) finally os.close()
     }
     ex.close()
+  }
+}
+
+object RecordsHttpServer {
+
+  /** Pool threads serving `/records` calls: one per core. */
+  val Workers: Int = Runtime.getRuntime.availableProcessors()
+
+  /** Admitted calls that may wait for a worker; one more is refused (503). */
+  val QueueDepth: Int = 32
+
+  /** Per-call deadline from admission, the reference's only latency figure:
+    * its e2e suite's 5 s bound (`app/server/test/index.js:26`). */
+  val DeadlineMs: Long = 5000L
+
+  /** Job tags are unique in the JVM: servers may share one SparkContext. */
+  private val callIds = new AtomicLong()
+
+  private val Overloaded = """{"error":"Service Unavailable","reason":"overloaded"}"""
+  private val TimedOut = s"""{"error":"Gateway Timeout","reason":"deadline","deadlineMs":$DeadlineMs}"""
+  private val Stopping = """{"error":"Service Unavailable","reason":"stopping"}"""
+
+  private def daemonThreads(prefix: String): ThreadFactory = {
+    val n = new AtomicLong()
+    r => {
+      val t = new Thread(r, s"$prefix-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    }
   }
 }

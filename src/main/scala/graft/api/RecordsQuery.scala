@@ -2,7 +2,7 @@ package graft.api
 
 import java.time.Instant
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
 
 import graft.plans.KplExplode
@@ -138,13 +138,23 @@ object RecordsQuery {
     * [[MaxEchoRows]] with a loud error instead of OOMing the driver. Never
     * route a corpus through this — scale-out sinks
     * (`df.write.json(...)` / `writeStream`, see `Verify.scala`,
-    * `FormatsSpec`) are the path for anything bigger than an API page. */
+    * `FormatsSpec`) are the path for anything bigger than an API page.
+    *
+    * One Spark job over every partition: each partition ships at most
+    * `MaxEchoRows + 1` rows, so the driver holds at most that many per
+    * partition before the refusal. (`limit(n).collect()` would plan a
+    * `CollectLimitExec`, whose incremental take runs a second job for the
+    * partitions the first did not fill.) Partitions arrive in order, so a
+    * sorted `df` keeps its order. */
   def toJsonArray(df: DataFrame): String = {
-    val rows = df.select(col("json")).limit(MaxEchoRows + 1).collect()
+    val cap = MaxEchoRows + 1
+    val rows = df.select(col("json")).as(Encoders.STRING)
+      .mapPartitions((it: Iterator[String]) => it.take(cap))(Encoders.STRING)
+      .collect()
     if (rows.length > MaxEchoRows)
       throw new IllegalStateException(
         s"toJsonArray: result exceeds MaxEchoRows=$MaxEchoRows; " +
           "use df.write.json(...) for corpus-sized output")
-    rows.map(_.getString(0)).mkString("[", ",", "]")
+    rows.mkString("[", ",", "]")
   }
 }

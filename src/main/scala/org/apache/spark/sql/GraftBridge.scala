@@ -10,12 +10,6 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Build a DataFrame from a logical plan (dev tooling: plan surgery in
-    * [[graft.tools.Probe]]); `Dataset.ofRows` is `private[sql]`. */
-  def ofRows(spark: SparkSession,
-             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
   /** Drain the async listener bus — `SparkContext.listenerBus` is
     * `private[spark]`. [[graft.tools.ScaleBench]] scopes task-metric
     * accumulation per query; without a drain, straggler `onTaskEnd` events

@@ -4,7 +4,10 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.time.Instant
 
-import org.apache.spark.sql.{DataFrame, Row}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftBridge, Row}
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -162,5 +165,51 @@ class RecordsQuerySpec extends AnyFunSuite with Matchers with SparkSpec {
       Map("streamname" -> "test-stream"), now).toOption.get
     val body = RecordsQuery.toJsonArray(df.orderBy("json"))
     body shouldBe Seq(a, b).sorted.mkString("[", ",", "]")
+  }
+
+  // ---- the echo: one job, bounded, ordered ---------------------------------
+
+  /** Spark jobs started while `body` runs. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftBridge.flushListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      GraftBridge.flushListenerBus(spark)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("toJsonArray collects a request over several partitions in one Spark job") {
+    val rows = (1L to 6L).map(i => (i, bare(contactEvent(Some(i)))))
+    val df = RecordsQuery.records(envelope(rows), Map("streamname" -> "s"), now).toOption.get
+    df.rdd.getNumPartitions should be >= 2
+    val (body, jobs) = jobsDuring(RecordsQuery.toJsonArray(df))
+    jobs shouldBe 1
+    body shouldBe (1L to 6L).map(i => contactEvent(Some(i))).mkString("[", ",", "]")
+  }
+
+  test("toJsonArray refuses a result over MaxEchoRows spread over several partitions, in one job") {
+    val n = RecordsQuery.MaxEchoRows + 3L
+    val df = spark.range(0L, n, 1L, 3).selectExpr("cast(id as string) as json")
+    val (err, jobs) = jobsDuring(intercept[IllegalStateException](RecordsQuery.toJsonArray(df)))
+    err.getMessage should startWith(
+      s"toJsonArray: result exceeds MaxEchoRows=${RecordsQuery.MaxEchoRows};")
+    jobs shouldBe 1
+  }
+
+  test("toJsonArray keeps the order of a sorted plan over several partitions") {
+    val payloads = (1L to 40L).map(i => contactEvent(Some(i), tenant = Some(41L - i)))
+    val df = RecordsQuery.records(
+      envelope(payloads.zipWithIndex.map { case (p, i) => (1L + i % 5, bare(p)) }),
+      Map("streamname" -> "s"), now).toOption.get
+    df.rdd.getNumPartitions should be >= 2
+    RecordsQuery.toJsonArray(df.orderBy("json")) shouldBe payloads.sorted.mkString("[", ",", "]")
+    RecordsQuery.toJsonArray(df.orderBy(org.apache.spark.sql.functions.col("json").desc)) shouldBe
+      payloads.sorted.reverse.mkString("[", ",", "]")
   }
 }
