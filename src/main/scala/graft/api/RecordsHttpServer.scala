@@ -43,6 +43,14 @@ import org.apache.spark.sql.DataFrame
   *  - [[stop]] → 503 `{"error":"Service Unavailable","reason":"stopping"}`
   *    for every call still open, whose jobs are cancelled the same way.
   *
+  * Start-up cost. The deadline has no exemption for the first call: if
+  * the SparkSession is not running yet, or the call's plan is the first
+  * the JVM generates code for, that call pays it inside its 5 s and may
+  * answer 504. Callers start the session before [[start]] and send
+  * warm-up calls before serving load, as `RecordsHttpServerSpec.beforeAll`
+  * (which touches `spark.sparkContext`) and perfbench's set-up (warm-up
+  * requests after each start) do.
+  *
   * The response body is the reference-parity bounded echo
   * ([[RecordsQuery.toJsonArray]]); a production deployment sinks the same
   * plan with `df.write` / `writeStream` instead of buffering it through an

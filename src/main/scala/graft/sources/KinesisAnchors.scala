@@ -29,7 +29,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    `AFTER_SEQUENCE_NUMBER` of a real sequence string, which is immune
   *    to retention trimming: unlike the TRIM_HORIZON fallback (whose
   *    re-counted ordinals shift if the readable start moved — see
-  *    [[KinesisHttpApi.getShardIteratorAtSequence]]), a persisted anchor
+  *    [[KinesisHttpApi.getShardIterator]]), a persisted anchor
   *    pins the committed ordinal space to a stream-absolute coordinate.
   *
   * Persistence is write-behind: a snapshot every `persistEvery` recorded

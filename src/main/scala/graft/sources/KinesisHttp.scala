@@ -15,14 +15,13 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * backend uses, so the field mapping is one spec-pinned code path however
   * the bytes arrive.
   *
-  * Wire→seam position mapping: the [[ShardBackend]] seam uses monotonic
-  * longs; REAL Kinesis sequence numbers are 186-bit decimals whose
-  * high-order bits encode ingestion time, so `sequence − base` deltas do
-  * NOT fit a long on a live stream (they are ~10³⁸). Positions here are
-  * therefore ORDINALS — record index from the shard's readable start —
-  * assigned by counting as pages arrive. Each served page records an
-  * ANCHOR (`position after the page` → `last record's real sequence
-  * string`), so a later range read at position `from` resumes with
+  * Wire→seam position mapping: positions are the ORDINALS of the
+  * [[KinesisDataApi]] contract — record index from the shard's readable
+  * start — assigned by counting as pages arrive. REAL Kinesis sequence
+  * numbers are 186-bit decimals whose high-order bits encode ingestion
+  * time, so `sequence − base` deltas would NOT fit a long on a live stream
+  * (they are ~10³⁸). Each served page records an ANCHOR (`position after
+  * the page` → `last record's real sequence string`), so a later range read at position `from` resumes with
   * `AFTER_SEQUENCE_NUMBER` of the nearest anchor at-or-below `from` (the
   * seam's range filter drops the ≤ page-size overlap). Anchors live in
   * the PROCESS-WIDE [[KinesisAnchorStore]] — never per-instance, because
@@ -44,19 +43,20 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * Throttling: `GetRecords` is limited per shard per second; throttled
   * calls surface as `ProvisionedThroughputExceededException` /
   * `ThrottlingException` (HTTP 400) or 5xx. Those retry on a bounded
-  * exponential backoff; anything else propagates (the micro-batch fails
-  * and retries rather than committing a partial range — see
-  * [[KinesisShardBackend.read]]'s loss contract).
+  * exponential backoff, at most [[KinesisHttpApi.MaxRetries]] times;
+  * anything else propagates (the micro-batch fails and retries rather
+  * than committing a partial range — see [[KinesisShardBackend.read]]'s
+  * loss contract).
   */
 final class KinesisHttpApi(
     endpoint: String,
     region: String,
     creds: AwsCredentials,
-    maxRetries: Int = 8,
     anchorDir: Option[String] = None,
     anchorPersistEvery: Int = 16,
     maxAnchorsPerShard: Int = 8192) extends KinesisDataApi {
 
+  import KinesisHttpApi.MaxRetries
   import KinesisWireJson._
 
   @transient private lazy val client =
@@ -66,9 +66,6 @@ final class KinesisHttpApi(
   @transient private lazy val uri = java.net.URI.create(
     if (endpoint.endsWith("/")) endpoint.dropRight(1) else endpoint)
 
-  /** shardId → metadata, from the last ListShards sweep. */
-  @transient private lazy val shardMeta =
-    new java.util.concurrent.ConcurrentHashMap[String, ShardInfo]()
   /** Per-token state: the stream/shard, the ordinal position of the next
     * record the iterator will yield, the anchor store pages write into,
     * and the REAL sequence string of the last record this iterator
@@ -106,8 +103,10 @@ final class KinesisHttpApi(
   /** GetShardIterator error types that mean the POSITION is gone (anchor
     * aged past retention, crossed a reshard, or the parent shard was
     * deleted) rather than a transient failure: only these fall back to a
-    * TRIM_HORIZON re-enumeration. Throttles/5xx already retried in
-    * [[post]]; anything else (auth, serialization) must propagate. */
+    * TRIM_HORIZON re-enumeration, which itself answers
+    * `ResourceNotFoundException` for a shard the stream does not have.
+    * Throttles/5xx already retried in [[post]]; anything else (auth,
+    * serialization) must propagate. */
   private val PositionGoneTypes = Set(
     "InvalidArgumentException", "ResourceNotFoundException")
 
@@ -144,7 +143,7 @@ final class KinesisHttpApi(
           .map(_.asText().split('#').last).getOrElse("")
         catch { case _: Exception => "" }
       val retryable = status == -1 || status >= 500 || RetryableTypes(errType)
-      if (!retryable || attempt >= maxRetries)
+      if (!retryable || attempt >= MaxRetries)
         throw new KinesisApiException(errType,
           s"$target failed (HTTP $status${if (errType.nonEmpty) s", $errType" else ""}) " +
             s"after ${attempt + 1} attempt(s): ${respBody.take(300)}")
@@ -165,8 +164,7 @@ final class KinesisHttpApi(
     mapper.writeValueAsString(n)
   }
 
-  /** Full ListShards sweep (paged on NextToken), refreshing the shard
-    * metadata map. */
+  /** Full ListShards sweep (paged on NextToken). */
   private def listShardInfos(streamName: String): Seq[ShardInfo] = {
     var out = Vector.empty[ShardInfo]
     var token: Option[String] = None
@@ -179,19 +177,11 @@ final class KinesisHttpApi(
       }
       val (shards, next) =
         parseListShardsPage(post("Kinesis_20131202.ListShards", body))
-      shards.foreach(s => shardMeta.put(s.shardId, s))
       out ++= shards
       token = next
     }
     out
   }
-
-  private def metaOf(streamName: String, shardId: String): ShardInfo =
-    Option(shardMeta.get(shardId)).getOrElse {
-      listShardInfos(streamName)
-      Option(shardMeta.get(shardId)).getOrElse(
-        sys.error(s"shard $shardId not found in stream $streamName"))
-    }
 
   private def register(token: String, st: IterState): String = {
     iteratorState.put(token, st); token
@@ -208,8 +198,7 @@ final class KinesisHttpApi(
     listShardInfos(streamName).map(_.toMeta)
 
   /** TRIM_HORIZON iterators start the ordinal position space at 0. */
-  override def getShardIterator(streamName: String, shardId: String): String = {
-    metaOf(streamName, shardId) // ensure shard metadata before records flow
+  private def trimHorizon(streamName: String, shardId: String): String = {
     val body = obj("StreamName" -> streamName, "ShardId" -> shardId,
       "ShardIteratorType" -> "TRIM_HORIZON")
     register(
@@ -218,10 +207,9 @@ final class KinesisHttpApi(
         lastSeq = None))
   }
 
-  override def getShardIteratorAtSequence(streamName: String, shardId: String,
-                                          sequence: Long): String = {
-    if (sequence <= 0L) return getShardIterator(streamName, shardId)
-    metaOf(streamName, shardId)
+  override def getShardIterator(streamName: String, shardId: String,
+                                from: Long): String = {
+    if (from <= 0L) return trimHorizon(streamName, shardId)
     val store = anchorsFor(streamName, shardId)
     // Nearest anchor at-or-below the requested position: resume with
     // AFTER_SEQUENCE_NUMBER of the real sequence recorded there; the
@@ -230,7 +218,7 @@ final class KinesisHttpApi(
     // per-partition backend instances AND restarted processes resume
     // positioned — only a resume below the eviction horizon, or a truly
     // anchorless shard, pays the TRIM_HORIZON fallback.
-    store.floor(sequence) match {
+    store.floor(from) match {
       case Some((anchorPos, anchorSeq)) =>
         val body = obj("StreamName" -> streamName, "ShardId" -> shardId,
           "ShardIteratorType" -> "AFTER_SEQUENCE_NUMBER",
@@ -256,7 +244,7 @@ final class KinesisHttpApi(
                 "were committed, re-counted ordinals are SHIFTED vs the " +
                 "committed positions — records may be skipped; re-seed the " +
                 "query from a fresh checkpoint if exactness is required")
-            getShardIterator(streamName, shardId)
+            trimHorizon(streamName, shardId)
         }
       case None =>
         // No anchor anywhere (first contact with this shard, snapshot
@@ -266,26 +254,16 @@ final class KinesisHttpApi(
         // where the committed ordinal space started — hence the loud
         // warning about retention trimming.
         System.err.println(
-          s"[graft] kinesis: no resume anchor for $shardId@$sequence " +
+          s"[graft] kinesis: no resume anchor for $shardId@$from " +
             "(fresh process without a persisted snapshot, or resume below " +
             "the anchor-eviction horizon); re-enumerating from TRIM_HORIZON " +
             "once. WARNING: if retention trimmed this shard since the " +
             "offsets were committed, re-counted ordinals are SHIFTED vs the " +
             "committed positions — records may be skipped; configure " +
             "anchorDir (on by default under a checkpoint) to avoid this path")
-        getShardIterator(streamName, shardId)
+        trimHorizon(streamName, shardId)
     }
   }
-
-  /** Always None: positions are ORDINALS, and a sequence-range span from
-    * shard metadata equals an ordinal count only when sequences are dense
-    * from the base — never true of real Kinesis sequences (time in high
-    * bits, span ~10³⁸) and not guaranteed by any wire transcript. The
-    * seam's bounded drain, resumed from committed offsets, counts
-    * ordinals instead; adapters whose sequences ARE dense ordinals by
-    * construction (the in-memory stubs) implement their own fast path. */
-  override def latestSequence(streamName: String, shardId: String): Option[Long] =
-    None
 
   /** Re-acquire an iterator for an EXPIRED token's lineage, positioned
     * exactly where the expired one was. Real iterators expire 5 minutes
@@ -336,9 +314,6 @@ final class KinesisHttpApi(
           token = reacquireExpired(st)
       }
     }
-    val records = page.records.zipWithIndex.map { case (w, i) =>
-      ShardRecord(st.nextPos + i, w.tsMillis, w.partitionKey, w.data)
-    }
     val nextPos = st.nextPos + page.records.size
     // One anchor per served page: to resume at `nextPos`, continue AFTER
     // the page's last real sequence. Eviction + durable snapshotting live
@@ -349,11 +324,18 @@ final class KinesisHttpApi(
     // LATER expiry re-acquires exactly after what this page consumed
     val lastSeq = page.records.lastOption
       .map(_.sequence.toString).orElse(st.lastSeq)
-    (records,
+    (page.shardRecords(st.nextPos),
       page.nextShardIterator.map(register(_,
         st.copy(nextPos = nextPos, lastSeq = lastSeq))),
       page.millisBehindLatest)
   }
+}
+
+object KinesisHttpApi {
+  /** Retries of a throttled, 5xx or transport-failed call before it
+    * propagates. The backoff doubles from 100 ms and caps at 3.2 s, so a
+    * call gives up after 9 attempts and 12.7 s of backoff. */
+  val MaxRetries = 8
 }
 
 /** A non-2xx (or retry-exhausted) Kinesis API response, carrying the

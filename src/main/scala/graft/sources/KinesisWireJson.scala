@@ -32,9 +32,9 @@ object KinesisWireJson {
 
   private val mapper = new ObjectMapper()
 
-  /** One record as decoded off the wire. `sequence` stays a BigInt here;
-    * see [[RecordedKinesisApi]] for the monotonic-long normalization the
-    * [[ShardBackend]] seam wants. */
+  /** One record as decoded off the wire. `sequence` stays a BigInt: seam
+    * positions are ordinals the transports count ([[KinesisDataApi]]), not
+    * sequence numbers. */
   final case class WireRecord(
       sequence: BigInt,
       tsMillis: Long,
@@ -45,7 +45,15 @@ object KinesisWireJson {
   final case class GetRecordsPage(
       records: Seq[WireRecord],
       nextShardIterator: Option[String],
-      millisBehindLatest: Long)
+      millisBehindLatest: Long) {
+    /** The page's records at seam positions: consecutive ordinals from
+      * `from`, the position the page's iterator was opened at
+      * ([[KinesisDataApi]]). */
+    def shardRecords(from: Long): Seq[ShardRecord] =
+      records.zipWithIndex.map { case (w, i) =>
+        ShardRecord(from + i, w.tsMillis, w.partitionKey, w.data)
+      }
+  }
 
   private def node(json: String): JsonNode = mapper.readTree(json)
 
@@ -55,26 +63,13 @@ object KinesisWireJson {
     v
   }
 
-  /** `{"Shards": [{"ShardId": ...}, ...]}` → shard ids, in listed order. */
-  def parseListShards(json: String): Seq[String] = {
-    val shards = req(node(json), "Shards", "ListShards response")
-    shards.elements().asScala
-      .map(s => req(s, "ShardId", "ListShards.Shards[]").asText())
-      .toSeq
-  }
-
-  /** One ListShards shard entry with the metadata a live adapter needs:
-    * the stable per-shard `SequenceNumberRange.StartingSequenceNumber`
-    * (the base of the wire→seam long normalization — constant for the
-    * shard's lifetime, so positions are restart-stable); for CLOSED
-    * shards only, the `EndingSequenceNumber` (the O(1) backlog-end
-    * metadata answer — its presence IS the closed flag); and the reshard
-    * lineage (`ParentShardId`, plus `AdjacentParentShardId` on a merge
-    * child) that drives parent-before-child admission
-    * ([[ReshardAdmission]]). */
+  /** One ListShards shard entry with the metadata the transports need:
+    * for CLOSED shards only, `SequenceNumberRange.EndingSequenceNumber`
+    * (its presence IS the closed flag), and the reshard lineage
+    * (`ParentShardId`, plus `AdjacentParentShardId` on a merge child) that
+    * drives parent-before-child admission ([[ReshardAdmission]]). */
   final case class ShardInfo(
       shardId: String,
-      startingSequence: BigInt,
       endingSequence: Option[BigInt],
       parentIds: Seq[String] = Nil) {
     def closed: Boolean = endingSequence.isDefined
@@ -93,8 +88,6 @@ object KinesisWireJson {
         Option(s.get(field)).filter(!_.isNull).map(_.asText()).filter(_.nonEmpty)
       ShardInfo(
         shardId = req(s, "ShardId", "ListShards.Shards[]").asText(),
-        startingSequence =
-          BigInt(req(range, "StartingSequenceNumber", "SequenceNumberRange").asText()),
         endingSequence = Option(range.get("EndingSequenceNumber"))
           .filter(!_.isNull).map(e => BigInt(e.asText())),
         parentIds =
@@ -130,7 +123,7 @@ object KinesisWireJson {
   * bodies captured from (or authored in the shape of) the real service:
   *
   * {{{
-  *   <dir>/list_shards.json            ListShards response
+  *   <dir>/list_shards.json            ListShards response (one page)
   *   <dir>/<shardId>/page-000.json     consecutive GetRecords responses,
   *   <dir>/<shardId>/page-001.json     in paging order
   *   ...
@@ -143,13 +136,11 @@ object KinesisWireJson {
   *    `NextShardIterator` contributes only its null-ness — a recorded null
   *    marks the shard closed, ending the chain exactly where the live
   *    session ended it.
-  *  - `SequenceNumber`s are 128-bit decimals; the [[ShardBackend]] seam
-  *    wants a monotonic long per shard. Replay normalizes by subtracting
-  *    the shard's first recorded sequence (gaps preserved — Kinesis
-  *    sequences are monotonic but NOT dense, per the public API contract).
-  *  - AT_SEQUENCE_NUMBER iterators bisect the recorded pages the way the
-  *    service would position them: first page whose tail reaches the
-  *    requested point.
+  *  - Positions are ordinals, as on the live transport: a record's
+  *    position is its index across the shard's recorded pages, whatever
+  *    its `SequenceNumber`. An iterator at position `from` opens at the
+  *    page holding that ordinal.
+  *  - A page is served as recorded: `getRecords` ignores `limit`.
   *
   * Constructible through [[BackendSpec]]'s reflective path via
   * [[RecordedKinesisBackend]], so the full DSv2 scan — partitions, offsets,
@@ -160,13 +151,13 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
 
   private def readFile(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
-  private val shards: Seq[String] =
-    parseListShards(readFile(Paths.get(dir, "list_shards.json")))
+  private val infos: Seq[ShardInfo] =
+    parseListShardsPage(readFile(Paths.get(dir, "list_shards.json")))._1
 
   /** shard → decoded pages, in recorded order. */
   private val pages: Map[String, IndexedSeq[GetRecordsPage]] =
-    shards.map { s =>
-      val shardDir = Paths.get(dir, s)
+    infos.map { info =>
+      val shardDir = Paths.get(dir, info.shardId)
       val files =
         if (Files.isDirectory(shardDir)) {
           val stream = Files.list(shardDir)
@@ -175,64 +166,30 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
             .toSeq.sortBy(_.getFileName.toString)
           finally stream.close()
         } else Seq.empty
-      s -> files.map(f => parseGetRecords(readFile(f))).toIndexedSeq
+      info.shardId -> files.map(f => parseGetRecords(readFile(f))).toIndexedSeq
     }.toMap
 
-  /** Per-shard sequence base for the wire→seam normalization. */
-  private val seqBase: Map[String, BigInt] =
-    pages.map { case (s, ps) =>
-      s -> ps.flatMap(_.records).headOption.map(_.sequence).getOrElse(BigInt(0))
-    }
+  /** shard → the position of each page's first record. */
+  private val pageStarts: Map[String, IndexedSeq[Long]] =
+    pages.map { case (s, ps) => s -> ps.scanLeft(0L)(_ + _.records.size).init }
 
-  private def toShardRecord(shard: String)(w: WireRecord): ShardRecord = {
-    val rel = w.sequence - seqBase(shard)
-    require(rel.isValidLong, s"recorded sequence span too large on $shard")
-    ShardRecord(rel.toLong, w.tsMillis, w.partitionKey, w.data)
-  }
-
-  override def listShards(streamName: String): Seq[String] = shards
-
-  /** Lineage from the recorded listing (lenient — recorded fixtures may
-    * omit `SequenceNumberRange`): parents from `ParentShardId` /
-    * `AdjacentParentShardId` when present; closed from the recorded
+  /** Lineage from the recorded listing; closed from the recorded
     * `EndingSequenceNumber` OR from replay's own closed signal (the last
     * recorded page's null `NextShardIterator`), whichever the session
     * captured. */
-  override def listShardMetas(streamName: String): Seq[ShardMeta] = shardMetaList
-
-  // Parsed ONCE per recording like the sibling vals: listShardMetas sits
-  // on the latestOffset trigger hot path, and the recorded listing is
-  // immutable for the session's lifetime.
-  private lazy val shardMetaList: Seq[ShardMeta] = {
-    val mapper = new ObjectMapper()
-    val root = mapper.readTree(readFile(Paths.get(dir, "list_shards.json")))
-    val byId = Option(root.get("Shards")).toSeq
-      .flatMap(_.elements().asScala).map { s =>
-        def optText(field: String): Option[String] =
-          Option(s.get(field)).filter(!_.isNull).map(_.asText()).filter(_.nonEmpty)
-        val id = s.get("ShardId").asText()
-        val endingRecorded = Option(s.get("SequenceNumberRange"))
-          .flatMap(r => Option(r.get("EndingSequenceNumber"))).exists(!_.isNull)
-        id -> ((optText("ParentShardId") ++ optText("AdjacentParentShardId")).toSeq,
-          endingRecorded)
-      }.toMap
-    shards.map { id =>
-      val (parents, endingRecorded) = byId.getOrElse(id, (Nil, false))
-      val replayClosed = pages.getOrElse(id, IndexedSeq.empty)
-        .lastOption.exists(_.nextShardIterator.isEmpty)
-      ShardMeta(id, parents, closed = endingRecorded || replayClosed)
-    }
+  private val metas: Seq[ShardMeta] = infos.map { info =>
+    val replayClosed = pages(info.shardId).lastOption.exists(_.nextShardIterator.isEmpty)
+    ShardMeta(info.shardId, info.parentIds, info.closed || replayClosed)
   }
 
-  override def getShardIterator(streamName: String, shardId: String): String =
-    s"$shardId#0"
+  override def listShards(streamName: String): Seq[String] = infos.map(_.shardId)
 
-  override def getShardIteratorAtSequence(streamName: String, shardId: String,
-                                          sequence: Long): String = {
-    val ps = pages.getOrElse(shardId, IndexedSeq.empty)
-    val i = ps.indexWhere(_.records.exists(r =>
-      (r.sequence - seqBase(shardId)) >= sequence))
-    s"$shardId#${if (i < 0) ps.length else i}"
+  override def listShardMetas(streamName: String): Seq[ShardMeta] = metas
+
+  override def getShardIterator(streamName: String, shardId: String,
+                                from: Long): String = {
+    val starts = pageStarts.getOrElse(shardId, IndexedSeq.empty)
+    s"$shardId#${math.max(0, starts.lastIndexWhere(_ <= from))}"
   }
 
   override def getRecords(iterator: String, limit: Int)
@@ -246,20 +203,20 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
       // a recorded null NextShardIterator closes the shard mid-stream
       val next =
         if (page.nextShardIterator.isEmpty) None else Some(s"$shard#${idx + 1}")
-      (page.records.map(toShardRecord(shard)), next, page.millisBehindLatest)
+      (page.shardRecords(pageStarts(shard)(idx)), next, page.millisBehindLatest)
     }
   }
 }
 
 /** [[ShardBackend]] over a recorded wire session, loadable by class name
   * through the `backend` option (see [[BackendSpec]]). Options:
-  * `path` (the recorded-session directory), optional `streamName`. */
+  * `path` (the recorded-session directory), optional `streamName`. Pages
+  * replay as recorded, so no page-size option applies. */
 final class RecordedKinesisBackend(options: Map[String, String]) extends ShardBackend {
   private val inner = new KinesisShardBackend(
     new RecordedKinesisApi(options.getOrElse("path",
       sys.error("recorded backend requires a 'path' option"))),
-    options.getOrElse("streamName", "recorded"),
-    pageSize = options.getOrElse("maxRecordsPerFetch", "100").toInt)
+    options.getOrElse("streamName", "recorded"))
   override def listShards(): Seq[String] = inner.listShards()
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
   override def latestPosition(shard: String, resumeFrom: Long): Long =

@@ -1,29 +1,14 @@
 package graft.sources
 
-/** One record in a shard, at a monotonically increasing per-shard position.
-  * The file backend uses the record index as `sequence`; a Kinesis backend
-  * maps the stream's sequence numbers onto the same monotonic space. */
+/** One record in a shard. `sequence` is its position: the record's ordinal
+  * from the shard's readable start. The file backend uses the frame index;
+  * a Kinesis backend counts records as they are paged ([[KinesisDataApi]]). */
 final case class ShardRecord(
     sequence: Long,
     tsMillis: Long,
     partitionKey: String,
     data: Array[Byte])
 
-/** The source's storage seam — the operations [[KplFileMicroBatchStream]]
-  * and the batch scan need from any shard store, shaped one-to-one after
-  * the public Kinesis data API the reference consumes
-  * (`kinesisReader/index.js:77-108`):
-  *
-  *  - [[listShards]]   ↔ ListShards
-  *  - [[latestPosition]] ↔ the backlog end (the reference detects it via
-  *    `MillisBehindLatest === 0` while paging; a positional store exposes
-  *    it directly)
-  *  - [[read]]         ↔ GetShardIterator + paged GetRecords over
-  *    [from, until)
-  *
-  * Implementations must be constructible on executors from a
-  * [[BackendSpec]] (string options only), so partitions stay serializable.
-  */
 /** Shard lifecycle metadata for RESHARD-aware planning (the ListShards
   * `ParentShardId` / `AdjacentParentShardId` / `EndingSequenceNumber`
   * fields of the public API): a split closes one parent and opens two
@@ -80,6 +65,21 @@ object ReshardAdmission {
   }
 }
 
+/** The source's storage seam — the operations [[KplFileMicroBatchStream]]
+  * and the batch scan need from any shard store, shaped one-to-one after
+  * the public Kinesis data API the reference consumes
+  * (`kinesisReader/index.js:77-108`):
+  *
+  *  - [[listShards]]   ↔ ListShards
+  *  - [[latestPosition]] ↔ the backlog end (the reference detects it via
+  *    `MillisBehindLatest === 0` while paging; a positional store exposes
+  *    it directly)
+  *  - [[read]]         ↔ GetShardIterator + paged GetRecords over
+  *    [from, until)
+  *
+  * Implementations must be constructible on executors from a
+  * [[BackendSpec]] (string options only), so partitions stay serializable.
+  */
 trait ShardBackend extends Serializable {
   def listShards(): Seq[String]
 
@@ -150,59 +150,53 @@ object BackendSpec {
 
 // ---- Kinesis-API-shaped adapter ---------------------------------------------
 
-/** The exact slice of the Kinesis data-plane API the reference uses
-  * (`kinesisReader/index.js:77-108`), as a neutral trait: a production
-  * deployment implements it in ~20 lines by delegating each method to the
-  * AWS SDK client call of the same name; tests implement it with an
-  * in-memory stub. Keeping the seam at the API-call level makes the
-  * catch-up/pagination logic in [[KinesisShardBackend]] — the part that is
-  * easy to get wrong — compile-checked and unit-testable offline.
+/** The slice of the Kinesis data-plane API the reference uses
+  * (`kinesisReader/index.js:77-108`): ListShards, GetShardIterator and
+  * paged GetRecords. [[KinesisHttpApi]] speaks it over the wire,
+  * [[RecordedKinesisApi]] replays recorded responses, and tests stub it in
+  * memory. Keeping the seam at the API-call level makes the catch-up and
+  * pagination logic in [[KinesisShardBackend]] — the part that is easy to
+  * get wrong — compile-checked and unit-testable offline.
+  *
+  * Positions. A position is a record's ORDINAL: its index from the shard's
+  * readable start, and 0 is TRIM_HORIZON. Real sequence numbers are sparse
+  * 128-bit decimals and never become positions. An adapter must:
+  *
+  *  - number the records of each [[getRecords]] page consecutively,
+  *    continuing from the position its iterator was opened at, so a shard
+  *    read from TRIM_HORIZON yields 0, 1, 2, … whatever the gaps between
+  *    the underlying sequence numbers;
+  *  - open [[getShardIterator]] at or before `from`, never after it.
+  *    [[KinesisShardBackend]] drops records below `from`, so an early
+  *    start costs pages, not correctness.
   */
 trait KinesisDataApi extends Serializable {
   /** ListShards → shard ids. */
   def listShards(streamName: String): Seq[String]
 
   /** ListShards → lifecycle metadata ([[ShardMeta]]). Default derives
-    * open/no-parent metas from [[listShards]] for adapters predating the
-    * reshard lifecycle; live adapters override with the listing's
-    * `ParentShardId` / `AdjacentParentShardId` / `EndingSequenceNumber`. */
+    * open/no-parent metas from [[listShards]]; the transports override it
+    * with the listing's `ParentShardId` / `AdjacentParentShardId` /
+    * `EndingSequenceNumber`. */
   def listShardMetas(streamName: String): Seq[ShardMeta] =
     listShards(streamName).map(ShardMeta(_, Nil, closed = false))
 
-  /** GetShardIterator at TRIM_HORIZON (the shard's readable start). The
+  /** GetShardIterator at position `from`; `from <= 0` is TRIM_HORIZON. The
     * reference's AT_TIMESTAMP lookback is a plan filter here
     * ([[graft.api.RecordsQuery.lookback]]), not an iterator type. */
-  def getShardIterator(streamName: String, shardId: String): String
+  def getShardIterator(streamName: String, shardId: String, from: Long): String
 
   /** GetRecords page: (records, nextIterator, millisBehindLatest).
     * `nextIterator = None` ↔ a closed shard; `millisBehindLatest == 0` is
     * the reference's catch-up termination signal (index.js:97-104). */
   def getRecords(iterator: String, limit: Int)
       : (Seq[ShardRecord], Option[String], Long)
-
-  /** GetShardIterator with AT_SEQUENCE_NUMBER positioning, so a range read
-    * starts paging AT `sequence` instead of draining the shard from
-    * TRIM_HORIZON on every micro-batch (which would be O(shard length) per
-    * read). Default falls back to TRIM_HORIZON for adapters without
-    * sequence positioning — correct, just not cheap — and
-    * [[KinesisShardBackend.read]] still filters to the requested range. */
-  def getShardIteratorAtSequence(streamName: String, shardId: String,
-                                 sequence: Long): String =
-    getShardIterator(streamName, shardId)
-
-  /** Shard-metadata answer for the backlog end (DescribeStream /
-    * EndingSequenceNumber style): `Some(lastSequence + 1)` when the adapter
-    * can answer without paging, `None` to make [[KinesisShardBackend]] fall
-    * back to the bounded GetRecords drain. Offset planning calls this every
-    * trigger, so production adapters should implement it. */
-  def latestSequence(streamName: String, shardId: String): Option[Long] = None
 }
 
 /** [[ShardBackend]] over a [[KinesisDataApi]]: reproduces the reference's
   * bounded catch-up loop — page with GetRecords(limit) from an iterator
   * until the requested range is covered or the backlog is drained
-  * (`MillisBehindLatest === 0`). Positions are the record sequence numbers
-  * reported by the API, which Kinesis guarantees monotonic per shard. */
+  * (`MillisBehindLatest === 0`). Positions are the adapter's ordinals. */
 final class KinesisShardBackend(
     api: KinesisDataApi, streamName: String, pageSize: Int = 100,
     maxEmptyPages: Int = 16, maxPagesPerCall: Int = 10000)
@@ -211,16 +205,12 @@ final class KinesisShardBackend(
   override def listShards(): Seq[String] = api.listShards(streamName)
   override def shardMetas(): Seq[ShardMeta] = api.listShardMetas(streamName)
 
-  /** Backlog end = last sequence + 1. Answered from shard metadata
-    * ([[KinesisDataApi.latestSequence]]) when the adapter supports it —
-    * offset planning calls this every trigger, and a metadata lookup keeps
-    * that O(1) instead of O(shard length). Otherwise falls back to the
-    * reference's drain, RESUMED from the caller's committed offset
-    * (AT_SEQUENCE_NUMBER iterator): each trigger's bounded probe then
-    * advances from where the last one left off, so a shard whose retained
-    * backlog exceeds one probe's page budget still makes progress every
-    * trigger instead of re-draining from TRIM_HORIZON and plateauing at
-    * the same cap forever.
+  /** Backlog end = last position + 1, found by the reference's drain,
+    * RESUMED from the caller's committed offset: each trigger's bounded
+    * probe advances from where the last one left off, so a shard whose
+    * retained backlog exceeds one probe's page budget still makes progress
+    * every trigger instead of re-draining from TRIM_HORIZON and plateauing
+    * at the same cap forever.
     *
     * Real GetRecords can legitimately return EMPTY pages while still
     * behind (throttling, sparse shards), so the drain loops are bounded by
@@ -230,39 +220,34 @@ final class KinesisShardBackend(
     * the remote service catching up. Under-reporting here is safe (a later
     * trigger reads the rest); a tripped page cap is logged so a persistent
     * stall is observable. */
-  override def latestPosition(shard: String, resumeFrom: Long): Long =
-    api.latestSequence(streamName, shard).getOrElse {
-      var it: Option[String] = Some(
-        if (resumeFrom > 0L)
-          api.getShardIteratorAtSequence(streamName, shard, resumeFrom)
-        else api.getShardIterator(streamName, shard))
-      // An adapter's fallback iterator may start before resumeFrom (the
-      // default getShardIteratorAtSequence is TRIM_HORIZON); the reported
-      // position must never regress below what the caller already committed.
-      var last = resumeFrom
-      var behind = Long.MaxValue
-      var emptyStreak = 0
-      var pages = 0
-      while (it.isDefined && behind != 0L && emptyStreak < maxEmptyPages &&
-             pages < maxPagesPerCall) {
-        val (records, next, b) = api.getRecords(it.get, pageSize)
-        pages += 1
-        emptyStreak = if (records.isEmpty) emptyStreak + 1 else 0
-        records.lastOption.foreach(r => last = math.max(last, r.sequence + 1))
-        it = next
-        behind = b
-      }
-      if (pages >= maxPagesPerCall && behind != 0L && it.isDefined)
-        System.err.println(
-          s"[graft] latestPosition($shard): backlog probe stopped at the " +
-            s"$maxPagesPerCall-page cap while still behind (position $last); " +
-            "the next trigger resumes from the committed offset")
-      last
+  override def latestPosition(shard: String, resumeFrom: Long): Long = {
+    var it: Option[String] = Some(api.getShardIterator(streamName, shard, resumeFrom))
+    // The iterator may open before resumeFrom; the reported position must
+    // never regress below what the caller already committed.
+    var last = resumeFrom
+    var behind = Long.MaxValue
+    var emptyStreak = 0
+    var pages = 0
+    while (it.isDefined && behind != 0L && emptyStreak < maxEmptyPages &&
+           pages < maxPagesPerCall) {
+      val (records, next, b) = api.getRecords(it.get, pageSize)
+      pages += 1
+      emptyStreak = if (records.isEmpty) emptyStreak + 1 else 0
+      records.lastOption.foreach(r => last = math.max(last, r.sequence + 1))
+      it = next
+      behind = b
     }
+    if (pages >= maxPagesPerCall && behind != 0L && it.isDefined)
+      System.err.println(
+        s"[graft] latestPosition($shard): backlog probe stopped at the " +
+          s"$maxPagesPerCall-page cap while still behind (position $last); " +
+          "the next trigger resumes from the committed offset")
+    last
+  }
 
-  /** Pages from an AT_SEQUENCE_NUMBER iterator positioned at `from`, so a
-    * micro-batch range read costs O(range), not O(shard prefix). The range
-    * filter stays (an adapter's fallback iterator may start earlier).
+  /** Pages from an iterator opened at `from`, so a micro-batch range read
+    * costs O(range), not O(shard prefix). The range filter stays (an
+    * iterator may open before `from`).
     *
     * Unlike [[latestPosition]] (where giving up early merely UNDER-reports
     * the backlog end and a later trigger catches up), `read` serves a
@@ -280,7 +265,7 @@ final class KinesisShardBackend(
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[ShardRecord]
     var it: Option[String] =
-      Some(api.getShardIteratorAtSequence(streamName, shard, from))
+      Some(api.getShardIterator(streamName, shard, from))
     var behind = Long.MaxValue
     var maxSeq = Long.MinValue
     var stuckPages = 0

@@ -213,6 +213,7 @@ object KinesisDouble {
               return err("ResourceNotFoundException", s"Stream $name not found")
             // eventual consistency counts top-level sweeps, not pages
             val sweep = listSweeps.incrementAndGet()
+            println(s"[double] ListShards sweep $sweep")
             if (reshard && sweep == reshardRevealAfter + 1)
               println(s"[double] ListShards sweep $sweep now REVEALS the " +
                 "reshard children (eventual consistency window over)")

@@ -80,7 +80,7 @@ class KinesisEndpointIntegrationSpec extends AnyFunSuite with Matchers
     val n = backend.latestPosition(shard)
     assume(n >= 2, s"need >=2 records in ${streamName}/$shard for the resume check")
     val full = backend.read(shard, 0L, n)
-    // a second read of the tail goes through getShardIteratorAtSequence +
+    // a second read of the tail opens its iterator at position n - 1 via
     // the anchor store; must agree byte-for-byte with the full drain
     val tail = backend.read(shard, n - 1, n)
     tail.map(_.sequence) shouldBe full.takeRight(1).map(_.sequence)
@@ -101,7 +101,7 @@ class KinesisEndpointIntegrationSpec extends AnyFunSuite with Matchers
     val shard = a.listShards(streamName).head
     // expiry BEFORE anything was consumed: the transport re-acquires from
     // the lineage start (nothing to lose)
-    val it0 = a.getShardIterator(streamName, shard)
+    val it0 = a.getShardIterator(streamName, shard, 0L)
     Thread.sleep(ttl + 300L)
     val (p1, next1, _) = a.getRecords(it0, 2)
     p1.map(_.sequence) shouldBe Seq(0L, 1L)

@@ -65,6 +65,14 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     * `ExpiredIteratorException` (HTTP 400) — the 5-minute iterator TTL. */
   private val expireOnce = new java.util.concurrent.atomic.AtomicBoolean(false)
   private val requestCount = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** Requests received per `X-Amz-Target`. */
+  private val targetCounts =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicInteger]()
+  private def targetCount(target: String): Int =
+    Option(targetCounts.get(target)).map(_.get()).getOrElse(0)
+  /** Every successful GetRecords response body, in serving order — the
+    * bytes a recording of this session would hold. */
+  private val servedPages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   /** Every GetShardIterator request's (shardId, iterator type) — the
     * evidence for positioned-vs-TRIM_HORIZON resume assertions. */
   private val iterRequests =
@@ -104,6 +112,8 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     requestCount.incrementAndGet()
     verifySignature(ex, body)
     val target = Option(ex.getRequestHeaders.getFirst("X-Amz-Target")).getOrElse("")
+    targetCounts.computeIfAbsent(target,
+      _ => new java.util.concurrent.atomic.AtomicInteger(0)).incrementAndGet()
     val json = new String(body, UTF_8)
     def field(name: String): Option[String] = {
       val m = s""""$name"\\s*:\\s*"((?:[^"\\\\]|\\\\.)*)"""".r
@@ -174,9 +184,11 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
             else s""""${Base64.getEncoder.encodeToString(
               s"$shardId@$nextIdx".getBytes(UTF_8))}""""
           val behind = if (atEnd) 0L else 1500L
-          (200, s"""{"Records": [${page.map(recJson).mkString(",")}],
+          val resp = s"""{"Records": [${page.map(recJson).mkString(",")}],
                    |"NextShardIterator": $next,
-                   |"MillisBehindLatest": $behind}""".stripMargin)
+                   |"MillisBehindLatest": $behind}""".stripMargin
+          servedPages.add(resp)
+          (200, resp)
         }
 
       case other =>
@@ -219,12 +231,6 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     val api = newApi()
     api.listShards(stream) shouldBe
       Seq("shardId-000000000000", "shardId-000000000001")
-    // ordinal positions: real sequence spans (~10^38 on live streams, and
-    // gap-ful even here) never map to dense longs, so the live transport
-    // answers None for BOTH open and closed shards — the seam's bounded
-    // drain (resumed from committed offsets) counts ordinals instead
-    api.latestSequence(stream, "shardId-000000000000") shouldBe None
-    api.latestSequence(stream, "shardId-000000000001") shouldBe None
   }
 
   test("backend over live transport: positions, gaps, resume, closed shard, throttle retry") {
@@ -318,7 +324,7 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     iterRequests.clear()
     val api = newApi()
     // first page consumed normally (records 0,1 at pageSize 2) ...
-    val it0 = api.getShardIterator(stream, "shardId-000000000000")
+    val it0 = api.getShardIterator(stream, "shardId-000000000000", 0L)
     val (p1, next1, _) = api.getRecords(it0, 2)
     p1.map(_.sequence) shouldBe Seq(0L, 1L)
     // ... then the server expires the continuation token (the 5-minute
@@ -343,10 +349,49 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     val api = newApi()
     // nothing consumed → TRIM_HORIZON re-acquire is exact (nextPos is
     // still 0)
-    val it = api.getShardIterator(stream, "shardId-000000000000")
+    val it = api.getShardIterator(stream, "shardId-000000000000", 0L)
     expireOnce.set(true)
     val (recs, _, _) = api.getRecords(it, 10)
     recs.map(_.sequence) shouldBe Seq(0L, 1L, 2L)
+  }
+
+  test("a range read through a fresh transport sends no ListShards request") {
+    // The DSv2 reader builds a fresh transport per partition per
+    // micro-batch; a read needs GetShardIterator + GetRecords only.
+    KinesisAnchorStore.dropInMemory()
+    targetCounts.clear()
+    new KinesisShardBackend(newApi(), stream, pageSize = 2)
+      .read("shardId-000000000000", 0L, 3L).map(_.sequence) shouldBe Seq(0L, 1L, 2L)
+    targetCount("Kinesis_20131202.ListShards") shouldBe 0
+    targetCount("Kinesis_20131202.GetShardIterator") shouldBe 1
+  }
+
+  test("the same GetRecords bodies read back equal, live and as a recording") {
+    // Both transports count ordinals, so a shard's seam positions do not
+    // depend on whether its pages came over the wire or from disk.
+    KinesisAnchorStore.dropInMemory()
+    val dir = java.nio.file.Files.createTempDirectory("kinesis-http-recorded")
+    java.nio.file.Files.writeString(dir.resolve("list_shards.json"),
+      s"""{"Shards": [${shardJson("shardId-000000000000", base0, None)},
+         |${shardJson("shardId-000000000001", base1, Some(base1 + 3))}]}""".stripMargin)
+    val shards = Seq("shardId-000000000000", "shardId-000000000001")
+    val live = new KinesisShardBackend(newApi(), stream, pageSize = 2)
+    val liveReads = shards.map { shard =>
+      // the backlog probe pages from TRIM_HORIZON: record exactly its pages
+      servedPages.clear()
+      val end = live.latestPosition(shard)
+      val shardDir = java.nio.file.Files.createDirectories(dir.resolve(shard))
+      servedPages.asScala.zipWithIndex.foreach { case (body, i) =>
+        java.nio.file.Files.writeString(shardDir.resolve(f"page-$i%03d.json"), body)
+      }
+      live.read(shard, 0L, end).map(r => (r.sequence, r.partitionKey))
+    }
+    liveReads.head.map(_._1) shouldBe Seq(0L, 1L, 2L)
+    val recorded = new KinesisShardBackend(new RecordedKinesisApi(dir.toString), stream)
+    shards.map { shard =>
+      recorded.read(shard, 0L, recorded.latestPosition(shard))
+        .map(r => (r.sequence, r.partitionKey))
+    } shouldBe liveReads
   }
 
   test("full DSv2 batch scan + de-aggregation through the HTTP backend; every request SigV4-valid") {

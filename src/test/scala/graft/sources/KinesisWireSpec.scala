@@ -28,7 +28,7 @@ class KinesisWireSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private val seq0 = BigInt("49579844037727333356165064238440708846556371693205002242")
 
-  private def wireRecord(seqOffset: Int, tsSec: String, pk: String, data: Array[Byte]): String =
+  private def wireRecord(seqOffset: BigInt, tsSec: String, pk: String, data: Array[Byte]): String =
     s"""{"ApproximateArrivalTimestamp": $tsSec,
         |"Data": "${Base64.getEncoder.encodeToString(data)}",
         |"PartitionKey": "$pk",
@@ -102,8 +102,9 @@ class KinesisWireSpec extends AnyFunSuite with Matchers with SparkSpec {
       """{"MillisBehindLatest": 0, "Records": []}""")
       .nextShardIterator shouldBe None
 
-    KinesisWireJson.parseListShards("""{"Shards": [{"ShardId": "shardId-000000000000"}]}""")
-      .shouldBe(Seq("shardId-000000000000"))
+    KinesisWireJson.parseListShardsPage("""{"Shards": [{"ShardId": "shardId-000000000000",
+        |"SequenceNumberRange": {"StartingSequenceNumber": "1"}}]}""".stripMargin)
+      ._1.map(_.shardId).shouldBe(Seq("shardId-000000000000"))
     KinesisWireJson.parseShardIterator("""{"ShardIterator": "AAAA=="}""") shouldBe "AAAA=="
 
     // a malformed body fails loudly, naming the missing field
@@ -120,14 +121,14 @@ class KinesisWireSpec extends AnyFunSuite with Matchers with SparkSpec {
     be.listShards() shouldBe
       Seq("shardId-000000000000", "shardId-000000000001")
 
-    // backlog end honors sequence GAPS (Kinesis sequences are not dense):
-    // records sit at relative 0, 2, 5 → end = 6
-    be.latestPosition("shardId-000000000000") shouldBe 6L
+    // positions are ordinals: the records at gapped sequences +0/+2/+5
+    // sit at 0, 1, 2 → end = 3
+    be.latestPosition("shardId-000000000000") shouldBe 3L
     // the closed shard terminates the drain via its null NextShardIterator
     be.latestPosition("shardId-000000000001") shouldBe 1L
 
-    val got = be.read("shardId-000000000000", 0L, 6L)
-    got.map(_.sequence) shouldBe Seq(0L, 2L, 5L)
+    val got = be.read("shardId-000000000000", 0L, 3L)
+    got.map(_.sequence) shouldBe Seq(0L, 1L, 2L)
     got.map(_.partitionKey) shouldBe
       Seq("partitionKey-0", "partitionKey-1", "pk-agg")
     got.map(_.tsMillis) shouldBe
@@ -142,8 +143,29 @@ class KinesisWireSpec extends AnyFunSuite with Matchers with SparkSpec {
       case other => fail(s"expected Aggregate, got $other")
     }
 
-    // range read from a mid-stream sequence positions into the right page
-    be.read("shardId-000000000000", 3L, 6L).map(_.sequence) shouldBe Seq(5L)
+    // range read from a mid-stream position opens at the right page
+    be.read("shardId-000000000000", 2L, 3L).map(_.sequence) shouldBe Seq(2L)
+  }
+
+  test("a recorded sequence span wider than a long reads back as ordinals") {
+    // Live sequence numbers carry ingestion time in their high bits, so two
+    // records of one shard may differ by far more than Long.MaxValue.
+    val dir = Files.createTempDirectory("kinesis-wire-wide").toString
+    Files.writeString(Paths.get(dir, "list_shards.json"),
+      s"""{"Shards": [{"ShardId": "shardId-000000000000",
+          |"SequenceNumberRange": {"StartingSequenceNumber": "$seq0"}}]}""".stripMargin)
+    val wide = BigInt(10).pow(30)
+    wide should be > BigInt(Long.MaxValue)
+    val shard = Paths.get(dir, "shardId-000000000000")
+    Files.createDirectories(shard)
+    Files.writeString(shard.resolve("page-000.json"),
+      s"""{"MillisBehindLatest": 0, "NextShardIterator": "AAAA/opaque",
+          |"Records": [${wireRecord(0, "1441215410.867", "pk-a", "a".getBytes(UTF_8))},
+          |${wireRecord(wide, "1441215411.102", "pk-b", "b".getBytes(UTF_8))}]}""".stripMargin)
+    val backend = new KinesisShardBackend(new RecordedKinesisApi(dir), "recorded")
+    backend.latestPosition("shardId-000000000000") shouldBe 2L
+    backend.read("shardId-000000000000", 0L, 2L).map(r => (r.sequence, r.partitionKey)) shouldBe
+      Seq((0L, "pk-a"), (1L, "pk-b"))
   }
 
   test("full DSv2 batch scan + de-aggregation over the recorded wire session") {

@@ -17,17 +17,14 @@ class StubKinesisApi(protected val data: Map[String, Seq[ShardRecord]]) extends 
 
   override def listShards(streamName: String): Seq[String] = data.keys.toSeq.sorted
 
-  override def getShardIterator(streamName: String, shardId: String): String =
-    s"$shardId/0"
-
-  override def getShardIteratorAtSequence(streamName: String, shardId: String,
-                                          sequence: Long): String = {
+  override def getShardIterator(streamName: String, shardId: String,
+                                from: Long): String = {
     val records = data(shardId)
-    val from = records.indexWhere(_.sequence >= sequence) match {
+    val at = records.indexWhere(_.sequence >= from) match {
       case -1 => records.length
       case i  => i
     }
-    s"$shardId/$from"
+    s"$shardId/$at"
   }
 
   override def getRecords(iterator: String, limit: Int)
@@ -88,7 +85,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     val got = be.read("shardId-000", 5L, 12L)
     got.map(_.sequence) shouldBe (5L until 12L)
     got.map(r => new String(r.data, UTF_8)) shouldBe (5 until 12).map(i => s"a$i")
-    // AT_SEQUENCE_NUMBER positions page 1 at seq 5; it covers [5,15) ⊇ [5,12)
+    // the iterator opens at position 5; page 1 covers [5,15) ⊇ [5,12)
     // → exactly one GetRecords, not a TRIM_HORIZON re-drain of the prefix
     api.getRecordsCalls shouldBe 1
   }
@@ -101,22 +98,13 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     api.getRecordsCalls shouldBe 1
   }
 
-  test("latestPosition answers from shard metadata without paging when available") {
-    val api = new StubKinesisApi(shardData) {
-      override def latestSequence(streamName: String, shardId: String): Option[Long] =
-        Some(data(shardId).last.sequence + 1)
-    }
-    val be = new KinesisShardBackend(api, "test-stream", pageSize = 10)
-    be.latestPosition("shardId-000") shouldBe 25L
-    api.getRecordsCalls shouldBe 0
-  }
-
   test("a live stream that never catches up cannot spin offset planning (total-page cap)") {
     // Non-empty pages forever, millisBehindLatest never 0: the empty-page cap
     // alone would not terminate; the total-page bound must.
     val live = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String): String = "0"
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String = "0"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) = {
         val pos = iterator.toLong
@@ -129,10 +117,10 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("capped backlog probe resumes from the committed offset (no plateau)") {
-    // 100-record backlog, no latestSequence metadata, probe budget of
-    // 2 pages × 10: a probe that always restarts from TRIM_HORIZON would
-    // return 20 on EVERY trigger — offset planning stalls forever. With the
-    // resume hint each trigger advances by the probe budget until caught up.
+    // 100-record backlog, probe budget of 2 pages × 10: a probe that
+    // always restarts from TRIM_HORIZON would return 20 on EVERY trigger —
+    // offset planning stalls forever. With the resume hint each trigger
+    // advances by the probe budget until caught up.
     val api = new StubKinesisApi(
       Map("shardId-000" -> (0L until 100L).map(i => rec(i, 1000 + i, s"a$i"))))
     val backend = new KinesisShardBackend(api, "s", pageSize = 10, maxPagesPerCall = 2)
@@ -146,9 +134,9 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     // if the adapter's fallback iterator starts earlier than the hint
     val noSeqIterator = new StubKinesisApi(
       Map("shardId-000" -> (0L until 100L).map(i => rec(i, 1000 + i, s"a$i")))) {
-      override def getShardIteratorAtSequence(streamName: String, shardId: String,
-                                              sequence: Long): String =
-        getShardIterator(streamName, shardId) // TRIM_HORIZON fallback
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String =
+        super.getShardIterator(streamName, shardId, 0L) // TRIM_HORIZON fallback
     }
     val backend2 = new KinesisShardBackend(noSeqIterator, "s", pageSize = 10, maxPagesPerCall = 2)
     backend2.latestPosition("shardId-000", 50L) should be >= 50L
@@ -157,7 +145,8 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("a throttled stream (endless empty pages while behind) cannot spin the drain loop") {
     val throttled = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String): String = "it"
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String = "it"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) =
         (Seq.empty, Some("it"), 999L) // never empty-handed AND never caught up
@@ -172,7 +161,8 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
   test("a non-advancing adapter (repeating pages) fails a range read rather than truncating") {
     val looping = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String): String = "it"
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String = "it"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) =
         // same page forever, never caught up: sequence progress stalls
@@ -187,9 +177,8 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     // 500-record range. Progress resets the guard, so this must succeed.
     val dribble = new KinesisDataApi {
       override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
-      override def getShardIterator(streamName: String, shardId: String): String = "0"
-      override def getShardIteratorAtSequence(streamName: String, shardId: String,
-                                              sequence: Long): String = sequence.toString
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String = from.toString
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) = {
         val pos = iterator.toLong
