@@ -164,9 +164,16 @@ final class KinesisHttpApi(
     mapper.writeValueAsString(n)
   }
 
-  /** Full ListShards sweep (paged on NextToken). */
-  private def listShardInfos(streamName: String): Seq[ShardInfo] = {
-    var out = Vector.empty[ShardInfo]
+  private def register(token: String, st: IterState): String = {
+    iteratorState.put(token, st); token
+  }
+
+  /** Full ListShards sweep, paged on NextToken, with the reshard lineage
+    * straight off the wire shape: a child is held by [[ReshardAdmission]]
+    * until its `ParentShardId` / `AdjacentParentShardId` ancestors
+    * (closed ⇔ `EndingSequenceNumber` present) are fully consumed. */
+  override def listShards(streamName: String): Seq[ShardMeta] = {
+    var out = Vector.empty[ShardMeta]
     var token: Option[String] = None
     var first = true
     while (first || token.isDefined) {
@@ -177,25 +184,11 @@ final class KinesisHttpApi(
       }
       val (shards, next) =
         parseListShardsPage(post("Kinesis_20131202.ListShards", body))
-      out ++= shards
+      out ++= shards.map(_.toMeta)
       token = next
     }
     out
   }
-
-  private def register(token: String, st: IterState): String = {
-    iteratorState.put(token, st); token
-  }
-
-  override def listShards(streamName: String): Seq[String] =
-    listShardInfos(streamName).map(_.shardId)
-
-  /** Reshard lineage straight off the ListShards wire shape: a child is
-    * held by [[ReshardAdmission]] until its `ParentShardId` /
-    * `AdjacentParentShardId` ancestors (closed ⇔ `EndingSequenceNumber`
-    * present) are fully consumed. */
-  override def listShardMetas(streamName: String): Seq[ShardMeta] =
-    listShardInfos(streamName).map(_.toMeta)
 
   /** TRIM_HORIZON iterators start the ordinal position space at 0. */
   private def trimHorizon(streamName: String, shardId: String): String = {
@@ -380,10 +373,9 @@ final class KinesisHttpBackend(options: Map[String, String]) extends ShardBacken
     options.getOrElse("streamName",
       sys.error("kinesis http backend: missing streamName")),
     pageSize = options.getOrElse("maxRecordsPerFetch", "1000").toInt)
-  override def listShards(): Seq[String] = inner.listShards()
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
-  override def latestPosition(shard: String, resumeFrom: Long): Long =
-    inner.latestPosition(shard, resumeFrom)
+  override def latestPosition(shard: String, from: Long, limit: Long): Long =
+    inner.latestPosition(shard, from, limit)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     inner.read(shard, from, until)
 }

@@ -182,9 +182,7 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
     ShardMeta(info.shardId, info.parentIds, info.closed || replayClosed)
   }
 
-  override def listShards(streamName: String): Seq[String] = infos.map(_.shardId)
-
-  override def listShardMetas(streamName: String): Seq[ShardMeta] = metas
+  override def listShards(streamName: String): Seq[ShardMeta] = metas
 
   override def getShardIterator(streamName: String, shardId: String,
                                 from: Long): String = {
@@ -217,10 +215,9 @@ final class RecordedKinesisBackend(options: Map[String, String]) extends ShardBa
     new RecordedKinesisApi(options.getOrElse("path",
       sys.error("recorded backend requires a 'path' option"))),
     options.getOrElse("streamName", "recorded"))
-  override def listShards(): Seq[String] = inner.listShards()
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
-  override def latestPosition(shard: String, resumeFrom: Long): Long =
-    inner.latestPosition(shard, resumeFrom)
+  override def latestPosition(shard: String, from: Long, limit: Long): Long =
+    inner.latestPosition(shard, from, limit)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     inner.read(shard, from, until)
 }

@@ -25,7 +25,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - offsets are per-shard record sequence numbers, checkpointed as JSON;
   *  - `maxRecordsPerFetch` (default 100, the reference's page size at
   *    `kinesisReader/index.js:22`) feeds admission control, so
-  *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2);
+  *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2).
+  *    It also bounds each trigger's backlog probe: a store that pages to
+  *    find a shard's end pages at most that many records past the
+  *    committed offset;
   *  - rows carry the Kinesis envelope (`data` still KPL-aggregated —
   *    de-aggregation is the downstream [[graft.plans.KplExplode]]
   *    generator, exactly as in the reference pipeline).
@@ -312,17 +315,20 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
 
   private val backend = spec.create() // driver-side instance (offset queries)
 
-  /** Each shard's backlog end, probed with its committed offset as the
-    * resume hint ([[ShardBackend.latestPosition]]). */
-  private def backlogEnds(metas: Seq[ShardMeta], committed: String => Long): Map[String, Long] =
-    metas.map(m => m.shardId -> backend.latestPosition(m.shardId, committed(m.shardId))).toMap
+  /** Each shard's backlog end, looking at most `limit` records past its
+    * committed offset ([[ShardBackend.latestPosition]]). */
+  private def backlogEnds(metas: Seq[ShardMeta], committed: String => Long,
+                          limit: Long): Map[String, Long] =
+    metas.map(m => m.shardId ->
+      backend.latestPosition(m.shardId, committed(m.shardId), limit)).toMap
 
   /** Under Trigger.AvailableNow, the backlog end is pinned here so the query
     * pages up to a fixed point and stops — the reference's catch-up
-    * termination check (`MillisBehindLatest === 0`, O2). */
+    * termination check (`MillisBehindLatest === 0`, O2). No row budget
+    * applies to this probe. */
   private var pinnedEnd: Option[Map[String, Long]] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    pinnedEnd = Some(backlogEnds(backend.shardMetas(), _ => 0L))
+    pinnedEnd = Some(backlogEnds(backend.shardMetas(), _ => 0L, Long.MaxValue))
 
   /** Every listed shard at position 0; no backlog probe is needed. */
   override def initialOffset(): Offset =
@@ -335,10 +341,10 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
 
   /** Bounded catch-up (O2): advance each shard by at most the row limit's
     * per-shard share — the paged `getRecords(Limit=100)` loop, distributed.
-    * The committed start offsets are passed to the backend as resume hints,
-    * so a backend whose backlog probe must page (no metadata answer)
-    * resumes from the committed position instead of re-draining the shard
-    * head every trigger.
+    * No shard can be admitted more than the whole limit, so each shard's
+    * backlog is probed from its committed offset and at most that far: a
+    * backend whose probe must page (no metadata answer) pages only what
+    * this trigger can use, not the whole backlog.
     *
     * RESHARD ordering ([[ReshardAdmission]]): a child shard is HELD at its
     * committed offset until every ancestor the stream still lists is
@@ -351,8 +357,12 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
     * so post-reshard throughput goes to the shards that can use it. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startOff = start.asInstanceOf[KplShardOffsets].offsets.withDefaultValue(0L)
+    val budget = limit match {
+      case rl: streaming.ReadMaxRows => math.max(1L, rl.maxRows())
+      case _ => Long.MaxValue
+    }
     val metas = backend.shardMetas()
-    val sizes = pinnedEnd.getOrElse(backlogEnds(metas, startOff))
+    val sizes = pinnedEnd.getOrElse(backlogEnds(metas, startOff, budget))
     val admitted = ReshardAdmission.admissible(
       metas, startOff, sizes.withDefaultValue(0L))
     metas.foreach { m =>
@@ -363,20 +373,12 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
               "parent that never closes stalls its children (check the " +
               "shard lifecycle metadata)"))
     }
-    val capped = limit match {
-      case rl: streaming.ReadMaxRows =>
-        val pending = sizes.count { case (s, n) => admitted(s) && n > startOff(s) }
-        val perShard = math.max(1L, rl.maxRows() / math.max(1, pending))
-        sizes.map { case (s, n) =>
-          if (!admitted(s)) s -> startOff(s)
-          else s -> math.min(n, startOff(s) + perShard)
-        }
-      case _ =>
-        sizes.map { case (s, n) =>
-          if (!admitted(s)) s -> startOff(s) else s -> n
-        }
-    }
-    KplShardOffsets(capped)
+    val pending = sizes.count { case (s, n) => admitted(s) && n > startOff(s) }
+    val perShard = math.max(1L, budget / math.max(1, pending))
+    KplShardOffsets(sizes.map { case (s, n) =>
+      s -> (if (admitted(s)) startOff(s) + math.min(perShard, n - startOff(s))
+            else startOff(s))
+    })
   }
 
   override def deserializeOffset(json: String): Offset = KplShardOffsets.fromJson(json)

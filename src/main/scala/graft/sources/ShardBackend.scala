@@ -70,51 +70,51 @@ object ReshardAdmission {
   * the public Kinesis data API the reference consumes
   * (`kinesisReader/index.js:77-108`):
   *
-  *  - [[listShards]]   ↔ ListShards
-  *  - [[latestPosition]] ↔ the backlog end (the reference detects it via
-  *    `MillisBehindLatest === 0` while paging; a positional store exposes
-  *    it directly)
-  *  - [[read]]         ↔ GetShardIterator + paged GetRecords over
+  *  - [[shardMetas]]     ↔ ListShards, with each shard's reshard lineage;
+  *    [[listShards]] is its ids
+  *  - [[latestPosition]] ↔ how far one trigger may read: the backlog end,
+  *    looking at most `limit` records past `from` (the reference detects
+  *    the end via `MillisBehindLatest === 0` while paging; a positional
+  *    store answers directly)
+  *  - [[read]]           ↔ GetShardIterator + paged GetRecords over
   *    [from, until)
   *
   * Implementations must be constructible on executors from a
   * [[BackendSpec]] (string options only), so partitions stay serializable.
   */
 trait ShardBackend extends Serializable {
-  def listShards(): Seq[String]
+  /** Every shard with its lifecycle metadata, for reshard-aware planning. */
+  def shardMetas(): Seq[ShardMeta]
 
-  /** Shard lifecycle metadata for reshard-aware planning. Default: every
-    * listed shard is open with no parents — correct for stores without a
-    * reshard lifecycle; stores that have one override. */
-  def shardMetas(): Seq[ShardMeta] =
-    listShards().map(ShardMeta(_, Nil, closed = false))
+  final def listShards(): Seq[String] = shardMetas().map(_.shardId)
 
-  /** The shard's backlog end, with a resume hint — the caller's last
-    * committed offset. Backends whose backlog probe must PAGE (no metadata
-    * answer) resume the drain from the hint instead of the shard head, so a
-    * bounded probe still advances trigger-over-trigger on a shard whose
-    * retained backlog exceeds one probe's page budget. Positional stores
-    * answer in O(1) and ignore the hint. */
-  def latestPosition(shard: String, resumeFrom: Long): Long
+  /** `min(backlog end, from + limit)`. `from` is the caller's committed
+    * offset and `limit` the most records one trigger may admit from this
+    * shard, so a store that must PAGE to find the end pages only what the
+    * trigger can use. A paging store that cannot see that far (a stalled
+    * live shard) may answer less, but not less than `from`: a later
+    * trigger reads the rest. `from + limit` may exceed `Long.MaxValue`. */
+  def latestPosition(shard: String, from: Long, limit: Long): Long
 
-  /** [[latestPosition]] probed from the shard head (no committed offset). */
-  final def latestPosition(shard: String): Long = latestPosition(shard, 0L)
+  /** The whole backlog end, probed from the shard head. */
+  final def latestPosition(shard: String): Long =
+    latestPosition(shard, 0L, Long.MaxValue)
 
   def read(shard: String, from: Long, until: Long): Seq[ShardRecord]
 }
 
 /** Default backend: local `shard-*.kpl` files via [[KplShardFiles]]. */
 final class FileShardBackend(path: String) extends ShardBackend {
-  override def listShards(): Seq[String] = KplShardFiles.listShards(path)
   /** Lifecycle metadata from the optional `shards.json` sidecar
     * ([[KplShardFiles.readMetas]]); shards without an entry default to
     * open/no-parents, so fixtures without a reshard stay unchanged. */
   override def shardMetas(): Seq[ShardMeta] = {
     val side = KplShardFiles.readMetas(path)
-    listShards().map(id => side.getOrElse(id, ShardMeta(id, Nil, closed = false)))
+    KplShardFiles.listShards(path)
+      .map(id => side.getOrElse(id, ShardMeta(id, Nil, closed = false)))
   }
-  override def latestPosition(shard: String, resumeFrom: Long): Long =
-    KplShardFiles.frameCount(path, shard)
+  override def latestPosition(shard: String, from: Long, limit: Long): Long =
+    from + math.min(limit, KplShardFiles.frameCount(path, shard) - from)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     // Slice-indexed read: a micro-batch decodes ONLY its [from, until)
     // frames (one seek + sequential slice), not the whole shard file —
@@ -171,15 +171,10 @@ object BackendSpec {
   *    start costs pages, not correctness.
   */
 trait KinesisDataApi extends Serializable {
-  /** ListShards → shard ids. */
-  def listShards(streamName: String): Seq[String]
-
-  /** ListShards → lifecycle metadata ([[ShardMeta]]). Default derives
-    * open/no-parent metas from [[listShards]]; the transports override it
-    * with the listing's `ParentShardId` / `AdjacentParentShardId` /
-    * `EndingSequenceNumber`. */
-  def listShardMetas(streamName: String): Seq[ShardMeta] =
-    listShards(streamName).map(ShardMeta(_, Nil, closed = false))
+  /** ListShards → every shard with its lineage ([[ShardMeta]]): the
+    * listing's `ParentShardId` / `AdjacentParentShardId`, and closed ⇔
+    * `EndingSequenceNumber` present. */
+  def listShards(streamName: String): Seq[ShardMeta]
 
   /** GetShardIterator at position `from`; `from <= 0` is TRIM_HORIZON. The
     * reference's AT_TIMESTAMP lookback is a plan filter here
@@ -193,98 +188,90 @@ trait KinesisDataApi extends Serializable {
       : (Seq[ShardRecord], Option[String], Long)
 }
 
-/** [[ShardBackend]] over a [[KinesisDataApi]]: reproduces the reference's
-  * bounded catch-up loop — page with GetRecords(limit) from an iterator
-  * until the requested range is covered or the backlog is drained
-  * (`MillisBehindLatest === 0`). Positions are the adapter's ordinals. */
+/** [[ShardBackend]] over a [[KinesisDataApi]]. The probe and the read run
+  * one paging loop, the reference's catch-up loop. Termination never
+  * depends on the service catching up: on a live stream with continuous
+  * writers `millisBehindLatest` may never reach 0, and GetRecords may
+  * return empty pages while still behind (throttling, sparse shards). So
+  * the probe asks for at most the trigger's budget, and
+  * [[KinesisShardBackend.StallPages]] pages in a row without a new
+  * position end the loop: the probe then under-reports, which is safe,
+  * and the read throws (see [[read]]). Positions are the adapter's
+  * ordinals. */
 final class KinesisShardBackend(
-    api: KinesisDataApi, streamName: String, pageSize: Int = 100,
-    maxEmptyPages: Int = 16, maxPagesPerCall: Int = 10000)
+    api: KinesisDataApi, streamName: String, pageSize: Int = 100)
     extends ShardBackend {
 
-  override def listShards(): Seq[String] = api.listShards(streamName)
-  override def shardMetas(): Seq[ShardMeta] = api.listShardMetas(streamName)
+  import KinesisShardBackend.{MaxProbePages, StallPages}
 
-  /** Backlog end = last position + 1, found by the reference's drain,
-    * RESUMED from the caller's committed offset: each trigger's bounded
-    * probe advances from where the last one left off, so a shard whose
-    * retained backlog exceeds one probe's page budget still makes progress
-    * every trigger instead of re-draining from TRIM_HORIZON and plateauing
-    * at the same cap forever.
-    *
-    * Real GetRecords can legitimately return EMPTY pages while still
-    * behind (throttling, sparse shards), so the drain loops are bounded by
-    * [[maxEmptyPages]] consecutive empty pages AND [[maxPagesPerCall]]
-    * total pages — on a live stream with continuous writers
-    * millisBehindLatest may never reach 0, so termination never depends on
-    * the remote service catching up. Under-reporting here is safe (a later
-    * trigger reads the rest); a tripped page cap is logged so a persistent
-    * stall is observable. */
-  override def latestPosition(shard: String, resumeFrom: Long): Long = {
-    var it: Option[String] = Some(api.getShardIterator(streamName, shard, resumeFrom))
-    // The iterator may open before resumeFrom; the reported position must
-    // never regress below what the caller already committed.
-    var last = resumeFrom
+  override def shardMetas(): Seq[ShardMeta] = api.listShards(streamName)
+
+  /** The one paging loop: GetRecords from an iterator opened at `from`,
+    * each call asking for `min(pageSize, records still wanted)`, until the
+    * position reaches `until`, the shard closes, the service reports it
+    * caught up (`millisBehindLatest == 0`), `maxPages` pages were read, or
+    * [[StallPages]] pages in a row brought no new position (empty or
+    * repeated). Hands `keep` each record in `[from, until)`. Returns the
+    * position after the newest record seen, within `[from, until]`, and
+    * whether the loop ended on a stall. */
+  private def walk(shard: String, from: Long, until: Long, maxPages: Int)
+                  (keep: ShardRecord => Unit): (Long, Boolean) = {
+    var it: Option[String] = Some(api.getShardIterator(streamName, shard, from))
     var behind = Long.MaxValue
-    var emptyStreak = 0
+    // The iterator may open before `from`: its records still count as
+    // progress, and none of them is kept.
+    var seen = Long.MinValue
+    var stalls = 0
     var pages = 0
-    while (it.isDefined && behind != 0L && emptyStreak < maxEmptyPages &&
-           pages < maxPagesPerCall) {
-      val (records, next, b) = api.getRecords(it.get, pageSize)
-      pages += 1
-      emptyStreak = if (records.isEmpty) emptyStreak + 1 else 0
-      records.lastOption.foreach(r => last = math.max(last, r.sequence + 1))
-      it = next
+    def next = math.max(from, seen)
+    while (it.isDefined && behind != 0L && next < until &&
+           stalls < StallPages && pages < maxPages) {
+      val (records, nextIt, b) =
+        api.getRecords(it.get, math.min(pageSize.toLong, until - next).toInt)
+      records.foreach(r => if (r.sequence >= from && r.sequence < until) keep(r))
+      val pageEnd = records.lastOption.fold(Long.MinValue)(_.sequence + 1)
+      stalls = if (pageEnd > seen) 0 else stalls + 1
+      seen = math.max(seen, pageEnd)
+      it = nextIt
       behind = b
+      pages += 1
     }
-    if (pages >= maxPagesPerCall && behind != 0L && it.isDefined)
-      System.err.println(
-        s"[graft] latestPosition($shard): backlog probe stopped at the " +
-          s"$maxPagesPerCall-page cap while still behind (position $last); " +
-          "the next trigger resumes from the committed offset")
-    last
+    (math.min(until, next), stalls >= StallPages)
   }
 
-  /** Pages from an iterator opened at `from`, so a micro-batch range read
-    * costs O(range), not O(shard prefix). The range filter stays (an
-    * iterator may open before `from`).
-    *
-    * Unlike [[latestPosition]] (where giving up early merely UNDER-reports
+  override def latestPosition(shard: String, from: Long, limit: Long): Long =
+    walk(shard, from, from + math.min(limit, Long.MaxValue - from),
+      MaxProbePages)(_ => ())._1
+
+  /** Unlike [[latestPosition]] (where giving up early merely UNDER-reports
     * the backlog end and a later trigger catches up), `read` serves a
     * PLANNED `[from, until)` range whose end offset the caller will
     * commit — silently returning a partial range would drop committed
     * records forever. So the only legitimate early exits are the ones
-    * where the missing records provably do not exist: the shard ended
-    * (iterator exhausted) or the API reports fully caught up
-    * (millisBehindLatest == 0). If the adapter stops making SEQUENCE
-    * PROGRESS for [[maxEmptyPages]] consecutive pages while still behind
-    * (endless throttle, or a pathological adapter repeating pages), `read`
-    * THROWS: the batch fails and retries instead of committing data loss.
-    * An adapter that advances with underfilled pages never trips the
-    * guard — progress, not page count, is what resets it. */
+    * where the missing records provably do not exist: the shard closed or
+    * the API reports it caught up. On a stall `read` THROWS: the batch
+    * fails and retries instead of committing data loss. An adapter that
+    * advances with underfilled pages never stalls — progress, not page
+    * count, is what the rule counts. */
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[ShardRecord]
-    var it: Option[String] =
-      Some(api.getShardIterator(streamName, shard, from))
-    var behind = Long.MaxValue
-    var maxSeq = Long.MinValue
-    var stuckPages = 0
-    while (it.isDefined && behind != 0L &&
-           out.lastOption.forall(_.sequence < until - 1)) {
-      val (records, next, b) = api.getRecords(it.get, pageSize)
-      val pageMax = records.lastOption.map(_.sequence).getOrElse(Long.MinValue)
-      stuckPages = if (pageMax > maxSeq) 0 else stuckPages + 1
-      maxSeq = math.max(maxSeq, pageMax)
-      out ++= records.filter(r => r.sequence >= from && r.sequence < until)
-      if (records.exists(_.sequence >= until - 1)) return out.toSeq
-      if (stuckPages >= maxEmptyPages)
-        throw new IllegalStateException(
-          s"read($shard, [$from, $until)) made no sequence progress for " +
-            s"$stuckPages consecutive GetRecords pages while still behind: " +
-            "refusing to commit a partial range (this batch will retry)")
-      it = next
-      behind = b
-    }
+    if (walk(shard, from, until, Int.MaxValue)(out += _)._2)
+      throw new IllegalStateException(
+        s"read($shard, [$from, $until)) made no position progress for " +
+          s"$StallPages consecutive GetRecords pages while still behind: " +
+          "refusing to commit a partial range (this batch will retry)")
     out.toSeq
   }
+}
+
+object KinesisShardBackend {
+  /** Consecutive pages without a new position that end a paging loop. */
+  val StallPages = 16
+
+  /** Pages one probe may read. A budgeted probe ends long before this,
+    * since it asks for at most `limit` records; the cap binds only the
+    * unbounded probe, [[ShardBackend.latestPosition]] with `Long.MaxValue`
+    * (`Trigger.AvailableNow`'s pinned end, or a read limit other than
+    * `maxRows`), on a shard whose writers outpace it. */
+  val MaxProbePages = 10000
 }

@@ -55,7 +55,7 @@ class KinesisEndpointIntegrationSpec extends AnyFunSuite with Matchers
     assume(endpointEnv.isDefined,
       "SPARK_GRAFT_KINESIS_ENDPOINT not set; integration check skipped")
     val a = api()
-    val shards = a.listShards(streamName)
+    val shards = a.listShards(streamName).map(_.shardId)
     shards should not be empty
     // drain every shard from TRIM_HORIZON through the seam's backend:
     // ordinal positions must be dense from 0 and data must round-trip
@@ -98,7 +98,7 @@ class KinesisEndpointIntegrationSpec extends AnyFunSuite with Matchers
         "set; run KinesisDouble with an iterator TTL (arg 5) to exercise this")
     val ttl = ttlEnv.get.toLong
     val a = api()
-    val shard = a.listShards(streamName).head
+    val shard = a.listShards(streamName).head.shardId
     // expiry BEFORE anything was consumed: the transport re-acquires from
     // the lineage start (nothing to lose)
     val it0 = a.getShardIterator(streamName, shard, 0L)

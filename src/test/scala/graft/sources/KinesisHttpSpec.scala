@@ -229,8 +229,9 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
 
   test("ListShards pages on NextToken; live transport never trusts dense metadata") {
     val api = newApi()
-    api.listShards(stream) shouldBe
-      Seq("shardId-000000000000", "shardId-000000000001")
+    api.listShards(stream) shouldBe Seq(
+      ShardMeta("shardId-000000000000", Nil, closed = false),
+      ShardMeta("shardId-000000000001", Nil, closed = true))
   }
 
   test("backend over live transport: positions, gaps, resume, closed shard, throttle retry") {

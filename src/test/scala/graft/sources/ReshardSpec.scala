@@ -3,6 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
@@ -256,12 +257,45 @@ class ReshardSpec extends AnyFunSuite with Matchers with SparkSpec {
     byShard("child-0").min should be > byShard("parent-0").max
   }
 
+  test("a budgeted backlog probe plans the same end offsets as a full probe") {
+    // The probe looks at most k records past each committed offset s, so
+    // it answers min(n, s + k), not the backlog end n. The planned offsets
+    // must still be the full-probe formula min(n, s + max(1, k / pending))
+    // for admitted shards, and s for held ones.
+    val dir = Files.createTempDirectory("reshard-budget").toString
+    val backlogs = Seq(23, 5, 40, 0, 12)
+    backlogs.zipWithIndex.foreach { case (n, i) => writeShard(dir, i, n, 1000L * i) }
+    KplShardFiles.writeMetas(dir, Seq(
+      meta(shardFile(0), Nil, closed = true),
+      meta(shardFile(1), Seq(shardFile(0)), closed = false),
+      meta(shardFile(2), Seq(shardFile(0)), closed = false)))
+    val ends = backlogs.zipWithIndex.map { case (n, i) => shardFile(i) -> n.toLong }.toMap
+    val metas = new FileShardBackend(dir).shardMetas()
+    for (k <- Seq(1L, 3L, 7L, 50L, 1000L)) {
+      val stream = new KplFileMicroBatchStream(
+        BackendSpec("files", Map("path" -> dir)), maxPerFetch = 100)
+      var s = stream.initialOffset().asInstanceOf[KplShardOffsets].offsets
+      while (s != ends) {
+        val admitted = ReshardAdmission.admissible(metas, s, ends)
+        val pending = ends.count { case (id, n) => admitted(id) && n > s(id) }
+        val want = ends.map { case (id, n) =>
+          id -> (if (admitted(id)) math.min(n, s(id) + math.max(1L, k / pending)) else s(id))
+        }
+        val got = stream.latestOffset(KplShardOffsets(s), ReadLimit.maxRows(k))
+          .asInstanceOf[KplShardOffsets].offsets
+        withClue(s"budget $k from $s: ") { got shouldBe want }
+        got should not be s
+        s = got
+      }
+    }
+  }
+
   // ---- the Kinesis-API-shaped backend carries the lineage ------------------
 
   test("KinesisShardBackend.shardMetas surfaces the adapter's lineage") {
     val api = new StubKinesisApi(Map(
       "s0" -> (0 until 3).map(i => ShardRecord(i.toLong, 1000L + i, s"k$i", Array[Byte](i.toByte))))) {
-      override def listShardMetas(streamName: String): Seq[ShardMeta] =
+      override def listShards(streamName: String): Seq[ShardMeta] =
         Seq(ShardMeta("s0", Nil, closed = true),
           ShardMeta("s1", Seq("s0"), closed = false))
     }

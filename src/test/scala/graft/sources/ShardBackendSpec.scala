@@ -2,6 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -14,8 +15,10 @@ import graft.SparkSpec
   * — the same observable behavior as the real GetRecords loop. */
 class StubKinesisApi(protected val data: Map[String, Seq[ShardRecord]]) extends KinesisDataApi {
   var getRecordsCalls: Int = 0
+  var recordsServed: Int = 0
 
-  override def listShards(streamName: String): Seq[String] = data.keys.toSeq.sorted
+  override def listShards(streamName: String): Seq[ShardMeta] =
+    data.keys.toSeq.sorted.map(ShardMeta(_, Nil, closed = false))
 
   override def getShardIterator(streamName: String, shardId: String,
                                 from: Long): String = {
@@ -36,6 +39,7 @@ class StubKinesisApi(protected val data: Map[String, Seq[ShardRecord]]) extends 
     val page = records.slice(pos, pos + limit)
     val nextPos = pos + page.length
     val behind = (records.length - nextPos).toLong // 0 ⇔ caught up
+    recordsServed += page.length
     (page, Some(s"$shard/$nextPos"), behind)
   }
 }
@@ -52,13 +56,32 @@ object InMemoryTestBackend {
   * proves the `backend=<fqcn>` option wires a non-file store through the
   * whole DSv2 read path. */
 class InMemoryTestBackend(options: Map[String, String]) extends ShardBackend {
-  override def listShards(): Seq[String] = InMemoryTestBackend.data.keys.toSeq.sorted
-  override def latestPosition(shard: String, resumeFrom: Long): Long = {
+  override def shardMetas(): Seq[ShardMeta] =
+    InMemoryTestBackend.data.keys.toSeq.sorted.map(ShardMeta(_, Nil, closed = false))
+  override def latestPosition(shard: String, from: Long, limit: Long): Long = {
     InMemoryTestBackend.probes.incrementAndGet()
-    InMemoryTestBackend.data(shard).length.toLong
+    from + math.min(limit, InMemoryTestBackend.data(shard).length - from)
   }
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     InMemoryTestBackend.data(shard).filter(r => r.sequence >= from && r.sequence < until)
+}
+
+object BudgetedKinesisBackend {
+  /** One 10,000-record shard; the stub counts GetRecords calls and the
+    * records they served. */
+  val api = new StubKinesisApi(Map("shardId-000" -> (0L until 10000L).map(i =>
+    ShardRecord(i, 1000 + i, s"pk$i", Array.emptyByteArray))))
+}
+
+/** [[KinesisShardBackend]] at page size 30 over [[BudgetedKinesisBackend.api]],
+  * loadable by class name through [[BackendSpec]]. */
+class BudgetedKinesisBackend(options: Map[String, String]) extends ShardBackend {
+  private val inner = new KinesisShardBackend(BudgetedKinesisBackend.api, "s", pageSize = 30)
+  override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
+  override def latestPosition(shard: String, from: Long, limit: Long): Long =
+    inner.latestPosition(shard, from, limit)
+  override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
+    inner.read(shard, from, until)
 }
 
 class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
@@ -99,10 +122,12 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
   }
 
   test("a live stream that never catches up cannot spin offset planning (total-page cap)") {
-    // Non-empty pages forever, millisBehindLatest never 0: the empty-page cap
-    // alone would not terminate; the total-page bound must.
+    // Non-empty pages forever, millisBehindLatest never 0: the stall rule
+    // alone would not terminate; the trigger's budget must, and the page
+    // cap bounds the one unbounded probe.
     val live = new KinesisDataApi {
-      override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
+      override def listShards(streamName: String): Seq[ShardMeta] =
+        Seq(ShardMeta("shardId-000", Nil, closed = false))
       override def getShardIterator(streamName: String, shardId: String,
                                     from: Long): String = "0"
       override def getRecords(iterator: String, limit: Int)
@@ -112,22 +137,23 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
          Some((pos + 1).toString), 999L)
       }
     }
-    val be = new KinesisShardBackend(live, "s", pageSize = 1, maxPagesPerCall = 20)
-    be.latestPosition("shardId-000") shouldBe 20L // stopped at the cap, not ∞
+    val be = new KinesisShardBackend(live, "s", pageSize = 1)
+    be.latestPosition("shardId-000", 0L, 20L) shouldBe 20L // stopped at the budget, not ∞
+    be.latestPosition("shardId-000") shouldBe KinesisShardBackend.MaxProbePages.toLong
   }
 
   test("capped backlog probe resumes from the committed offset (no plateau)") {
-    // 100-record backlog, probe budget of 2 pages × 10: a probe that
+    // 100-record backlog, probe budget of 20 records: a probe that
     // always restarts from TRIM_HORIZON would return 20 on EVERY trigger —
     // offset planning stalls forever. With the resume hint each trigger
     // advances by the probe budget until caught up.
     val api = new StubKinesisApi(
       Map("shardId-000" -> (0L until 100L).map(i => rec(i, 1000 + i, s"a$i"))))
-    val backend = new KinesisShardBackend(api, "s", pageSize = 10, maxPagesPerCall = 2)
-    backend.latestPosition("shardId-000") shouldBe 20L // capped first probe
-    backend.latestPosition("shardId-000") shouldBe 20L // hintless probe plateaus
+    val backend = new KinesisShardBackend(api, "s", pageSize = 10)
+    backend.latestPosition("shardId-000", 0L, 20L) shouldBe 20L // capped first probe
+    backend.latestPosition("shardId-000", 0L, 20L) shouldBe 20L // hintless probe plateaus
     // simulated trigger loop: each probe resumes from the last committed end
-    val ends = Iterator.iterate(0L)(off => backend.latestPosition("shardId-000", off))
+    val ends = Iterator.iterate(0L)(off => backend.latestPosition("shardId-000", off, 20L))
       .drop(1).take(6).toSeq
     ends shouldBe Seq(20L, 40L, 60L, 80L, 100L, 100L)
     // the reported position never regresses below the committed offset even
@@ -138,21 +164,38 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
                                     from: Long): String =
         super.getShardIterator(streamName, shardId, 0L) // TRIM_HORIZON fallback
     }
-    val backend2 = new KinesisShardBackend(noSeqIterator, "s", pageSize = 10, maxPagesPerCall = 2)
-    backend2.latestPosition("shardId-000", 50L) should be >= 50L
+    val backend2 = new KinesisShardBackend(noSeqIterator, "s", pageSize = 10)
+    backend2.latestPosition("shardId-000", 50L, 20L) should be >= 50L
+  }
+
+  test("a trigger's backlog probe pages only the records its budget admits") {
+    val api = BudgetedKinesisBackend.api
+    val stream = new KplFileMicroBatchStream(
+      BackendSpec(classOf[BudgetedKinesisBackend].getName, Map.empty), maxPerFetch = 100)
+    var offset = stream.initialOffset()
+    for (trigger <- 1 to 2) {
+      api.getRecordsCalls = 0
+      api.recordsServed = 0
+      offset = stream.latestOffset(offset, ReadLimit.maxRows(100))
+      offset shouldBe KplShardOffsets(Map("shardId-000" -> 100L * trigger))
+      // ⌈100 / 30⌉ pages, each asking for at most what is still wanted
+      api.getRecordsCalls should be <= (100 + 29) / 30 + 1
+      api.recordsServed should be <= 100
+    }
   }
 
   test("a throttled stream (endless empty pages while behind) cannot spin the drain loop") {
     val throttled = new KinesisDataApi {
-      override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
+      override def listShards(streamName: String): Seq[ShardMeta] =
+        Seq(ShardMeta("shardId-000", Nil, closed = false))
       override def getShardIterator(streamName: String, shardId: String,
                                     from: Long): String = "it"
       override def getRecords(iterator: String, limit: Int)
           : (Seq[ShardRecord], Option[String], Long) =
         (Seq.empty, Some("it"), 999L) // never empty-handed AND never caught up
     }
-    val be = new KinesisShardBackend(throttled, "s", pageSize = 10, maxEmptyPages = 5)
-    be.latestPosition("shardId-000") shouldBe 0L // terminates via the empty-page cap
+    val be = new KinesisShardBackend(throttled, "s", pageSize = 10)
+    be.latestPosition("shardId-000") shouldBe 0L // terminates via the stall rule
     // A PLANNED range read must not silently truncate: committing `until`
     // over a partial result drops records forever. Terminate by THROWING.
     assertThrows[IllegalStateException](be.read("shardId-000", 0L, 100L))
@@ -160,7 +203,8 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   test("a non-advancing adapter (repeating pages) fails a range read rather than truncating") {
     val looping = new KinesisDataApi {
-      override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
+      override def listShards(streamName: String): Seq[ShardMeta] =
+        Seq(ShardMeta("shardId-000", Nil, closed = false))
       override def getShardIterator(streamName: String, shardId: String,
                                     from: Long): String = "it"
       override def getRecords(iterator: String, limit: Int)
@@ -168,7 +212,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
         // same page forever, never caught up: sequence progress stalls
         (Seq(ShardRecord(3, 1003, "pk3", Array.emptyByteArray)), Some("it"), 999L)
     }
-    val be = new KinesisShardBackend(looping, "s", pageSize = 10, maxEmptyPages = 4)
+    val be = new KinesisShardBackend(looping, "s", pageSize = 10)
     assertThrows[IllegalStateException](be.read("shardId-000", 0L, 100L))
   }
 
@@ -176,7 +220,8 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     // 1 record per page regardless of the requested limit: 500 pages for a
     // 500-record range. Progress resets the guard, so this must succeed.
     val dribble = new KinesisDataApi {
-      override def listShards(streamName: String): Seq[String] = Seq("shardId-000")
+      override def listShards(streamName: String): Seq[ShardMeta] =
+        Seq(ShardMeta("shardId-000", Nil, closed = false))
       override def getShardIterator(streamName: String, shardId: String,
                                     from: Long): String = from.toString
       override def getRecords(iterator: String, limit: Int)
@@ -186,7 +231,7 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
          Some((pos + 1).toString), if (pos >= 499) 0L else 999L)
       }
     }
-    val be = new KinesisShardBackend(dribble, "s", pageSize = 100, maxEmptyPages = 4)
+    val be = new KinesisShardBackend(dribble, "s", pageSize = 100)
     be.read("shardId-000", 0L, 500L).map(_.sequence) shouldBe (0L until 500L)
   }
 
