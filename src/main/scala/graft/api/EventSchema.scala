@@ -88,16 +88,45 @@ object EventSchema {
     * PERMISSIVE mode with `columnNameOfCorruptRecord` reproduces the
     * reference's `{"INVALID JSON": raw}` fallback as a populated
     * `event.`INVALID JSON`` field instead of a dropped or poisoned row.
+    *
+    * Raw id guard (filter before you parse): given the query's numeric
+    * `ids`, `from_json` reads `json` only where the payload's bytes contain
+    * the decimal text of every id, and gets null, so `event = null`, for
+    * any other payload. The stage order is lookback → KPL flatten → raw id
+    * guard → JSON decode → filters. The guard never drops a match:
+    *  - a `LongType` leaf of `from_json` takes only a JSON integer token
+    *    (a string `"5"`, `5.0`, `5e0`, `05` or `+5` reads null), and a JSON
+    *    integer has one spelling: optional `-`, digits, no leading zero, no
+    *    escape. So a leaf equal to `id` is spelled `id.toString` in the
+    *    text, `-` included; `-0` contains `0`;
+    *  - `from_json` decodes the bytes as UTF-8, where an ASCII digit or
+    *    `-` is always its own byte and no other sequence (invalid bytes
+    *    included) decodes to one. So the text holds `id.toString` only if
+    *    the bytes do, and `Column.contains` compares bytes.
+    * Every equality filter on an id therefore rejects every payload the
+    * guard nulls, and each surviving row's `event` is the unguarded one.
+    *
+    * The guard sits inside `from_json`'s input, not in the filter: the
+    * generated filter code hoists the one `from_json` that both branches of
+    * `main === id || alt === id` read (subexpression elimination), so a
+    * `contains` conjunct in front of the predicate would still parse every
+    * row. `serverName` stays unguarded: a JSON string may spell a letter as
+    * `\u0063`, and the match is case-insensitive, so no byte test is sound
+    * for it. With no ids the plan is the unguarded parse.
     */
-  def parse(df: DataFrame): DataFrame =
+  def parse(df: DataFrame, ids: Seq[Long] = Nil): DataFrame = {
+    val json = col("payload").cast(StringType)
+    val input = ids.distinct.map(id => json.contains(id.toString))
+      .reduceOption(_ && _).fold(json)(when(_, json))
     df
-      .withColumn("json", col("payload").cast(StringType))
+      .withColumn("json", json)
       .withColumn(
         "event",
         from_json(
-          col("json"),
+          input,
           schemaWithCorrupt,
           Map(
             "mode" -> "PERMISSIVE",
             "columnNameOfCorruptRecord" -> CorruptField)))
+  }
 }

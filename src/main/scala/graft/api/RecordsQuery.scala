@@ -11,8 +11,8 @@ import graft.plans.KplExplode
   * (SURVEY.md §2.3): 7 URL parameters → validated plan over a record stream.
   *
   * Pipeline (SURVEY.md §3.1): source scan from the lookback start → KPL
-  * de-aggregate (flatten) → JSON decode → conjunctive filters → sink. The
-  * batch plan ([[plan]]) and the catch-up stream
+  * de-aggregate (flatten) → raw id guard → JSON decode → conjunctive
+  * filters → sink. The batch plan ([[plan]]) and the catch-up stream
   * ([[graft.streaming.RecordsStream.records]]) share [[pipeline]].
   */
 object RecordsQuery {
@@ -109,12 +109,24 @@ object RecordsQuery {
     pipeline(lookback(envelope, q, now), q)
 
   /** The one records plan, shared by batch and stream: KPL flatten
-    * (strict-drop, [[KplExplode.userRecords]]) → JSON decode → the query's
-    * filters, projected to `json` + `event`. */
-  def pipeline(envelope: DataFrame, q: Query): DataFrame =
-    EventSchema.parse(KplExplode.userRecords(envelope))
+    * (strict-drop, [[KplExplode.userRecords]]) → raw id guard → JSON
+    * decode → the query's filters, projected to `json` + `event`.
+    *
+    * The guard ([[EventSchema.parse]]) hands `from_json` only payloads
+    * whose bytes hold the decimal text of every numeric id the query
+    * names; any other payload decodes to a null `event`, which the filters
+    * drop. It is sound because a JSON integer has one spelling and an ASCII
+    * digit is its own byte in UTF-8, so it never drops a match and every
+    * kept row is byte-identical to the unguarded plan's. It lives inside
+    * the decode's input because subexpression elimination evaluates the
+    * shared `from_json` before any conjunct of the filter could skip it.
+    * `serverName` is not guarded (a `\u0063` escape defeats a byte test). */
+  def pipeline(envelope: DataFrame, q: Query): DataFrame = {
+    val ids = Seq(q.contactId, q.agentId, q.tenantId, q.agentShiftId).flatten
+    EventSchema.parse(KplExplode.userRecords(envelope), ids)
       .filter(predicate(q))
       .select(col("json"), col("event"))
+  }
 
   /** Validate + plan in one step, the `GET /records` analog. */
   def records(

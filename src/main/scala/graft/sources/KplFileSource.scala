@@ -28,7 +28,11 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2).
   *    It also bounds each trigger's backlog probe: a store that pages to
   *    find a shard's end pages at most that many records past the
-  *    committed offset;
+  *    committed offset. [[KinesisHttpBackend]] reads the same option as
+  *    its GetRecords page size, with default 1,000; each call asks for at
+  *    most the records a trigger still wants, so that page size binds only
+  *    where no row budget applies (the `AvailableNow` pin, and read limits
+  *    other than `maxRows`);
   *  - rows carry the Kinesis envelope (`data` still KPL-aggregated —
   *    de-aggregation is the downstream [[graft.plans.KplExplode]]
   *    generator, exactly as in the reference pipeline).
@@ -315,20 +319,13 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
 
   private val backend = spec.create() // driver-side instance (offset queries)
 
-  /** Each shard's backlog end, looking at most `limit` records past its
-    * committed offset ([[ShardBackend.latestPosition]]). */
-  private def backlogEnds(metas: Seq[ShardMeta], committed: String => Long,
-                          limit: Long): Map[String, Long] =
-    metas.map(m => m.shardId ->
-      backend.latestPosition(m.shardId, committed(m.shardId), limit)).toMap
-
   /** Under Trigger.AvailableNow, the backlog end is pinned here so the query
     * pages up to a fixed point and stops — the reference's catch-up
     * termination check (`MillisBehindLatest === 0`, O2). No row budget
     * applies to this probe. */
   private var pinnedEnd: Option[Map[String, Long]] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    pinnedEnd = Some(backlogEnds(backend.shardMetas(), _ => 0L, Long.MaxValue))
+    pinnedEnd = Some(backend.listShards().map(s => s -> backend.latestPosition(s)).toMap)
 
   /** Every listed shard at position 0; no backlog probe is needed. */
   override def initialOffset(): Offset =
@@ -354,7 +351,13 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
     * unlock the trigger after their parents drain. The row budget is
     * divided among shards with ADMITTED PENDING work only: fully-drained
     * closed parents and held children don't dilute the per-shard share,
-    * so post-reshard throughput goes to the shards that can use it. */
+    * so post-reshard throughput goes to the shards that can use it.
+    *
+    * Each shard is probed at most once per trigger, and only when needed:
+    * admission reads the ends of closed listed parents, then the admitted
+    * shards are probed. A held child is probed only when one of its listed
+    * parents is OPEN, for the warning below, so children waiting on a
+    * draining closed parent cost no GetRecords call. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startOff = start.asInstanceOf[KplShardOffsets].offsets.withDefaultValue(0L)
     val budget = limit match {
@@ -362,23 +365,28 @@ class KplFileMicroBatchStream(spec: BackendSpec, maxPerFetch: Int)
       case _ => Long.MaxValue
     }
     val metas = backend.shardMetas()
-    val sizes = pinnedEnd.getOrElse(backlogEnds(metas, startOff, budget))
-    val admitted = ReshardAdmission.admissible(
-      metas, startOff, sizes.withDefaultValue(0L))
+    val probed = scala.collection.mutable.Map.empty[String, Long]
+    val end: String => Long = s => pinnedEnd match {
+      case Some(pinned) => pinned.getOrElse(s, 0L)
+      case None => probed.getOrElseUpdate(s, backend.latestPosition(s, startOff(s), budget))
+    }
+    val admitted = ReshardAdmission.admissible(metas, startOff, end)
     metas.foreach { m =>
-      if (!admitted(m.shardId) && sizes.getOrElse(m.shardId, 0L) > startOff(m.shardId))
+      if (!admitted(m.shardId))
         m.parentIds.find(p => metas.exists(x => x.shardId == p && !x.closed))
+          .filter(_ => end(m.shardId) > startOff(m.shardId))
           .foreach(p => System.err.println(
             s"[graft] reshard: holding ${m.shardId} on OPEN parent $p — a " +
               "parent that never closes stalls its children (check the " +
               "shard lifecycle metadata)"))
     }
-    val pending = sizes.count { case (s, n) => admitted(s) && n > startOff(s) }
+    val shards = pinnedEnd.fold(metas.map(_.shardId))(_.keys.toSeq)
+    val pending = shards.count(s => admitted(s) && end(s) > startOff(s))
     val perShard = math.max(1L, budget / math.max(1, pending))
-    KplShardOffsets(sizes.map { case (s, n) =>
-      s -> (if (admitted(s)) startOff(s) + math.min(perShard, n - startOff(s))
+    KplShardOffsets(shards.map { s =>
+      s -> (if (admitted(s)) startOff(s) + math.min(perShard, end(s) - startOff(s))
             else startOff(s))
-    })
+    }.toMap)
   }
 
   override def deserializeOffset(json: String): Offset = KplShardOffsets.fromJson(json)

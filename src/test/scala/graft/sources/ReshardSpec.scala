@@ -20,6 +20,30 @@ import graft.SparkSpec
   * shard counts resharding is routine, so the engine's source must order
   * it.
   */
+object HeldChildrenBackend {
+  /** A closed parent with a 50-record backlog, split into two children
+    * with 30 records each; GetRecords calls are counted per shard. */
+  val calls = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  private def records(n: Int) =
+    (0 until n).map(i => ShardRecord(i.toLong, 1000L + i, s"k$i", Array.emptyByteArray))
+  val api = new StubKinesisApi(Map(
+      "parent" -> records(50), "child-a" -> records(30), "child-b" -> records(30))) {
+    override def listShards(streamName: String): Seq[ShardMeta] = Seq(
+      ShardMeta("parent", Nil, closed = true),
+      ShardMeta("child-a", Seq("parent"), closed = false),
+      ShardMeta("child-b", Seq("parent"), closed = false))
+    override def getRecords(iterator: String, limit: Int)
+        : (Seq[ShardRecord], Option[String], Long) = {
+      calls.merge(iterator.split("/")(0), 1, _ + _)
+      super.getRecords(iterator, limit)
+    }
+  }
+}
+
+/** Page size 10 over [[HeldChildrenBackend.api]]. */
+class HeldChildrenBackend(options: Map[String, String])
+    extends StubKinesisBackend(HeldChildrenBackend.api, pageSize = 10)
+
 class ReshardSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private def meta(id: String, parents: Seq[String], closed: Boolean) =
@@ -288,6 +312,30 @@ class ReshardSpec extends AnyFunSuite with Matchers with SparkSpec {
         s = got
       }
     }
+  }
+
+  test("children held on a draining closed parent get no GetRecords call") {
+    val calls = HeldChildrenBackend.calls
+    val stream = new KplFileMicroBatchStream(
+      BackendSpec(classOf[HeldChildrenBackend].getName, Map.empty), maxPerFetch = 20)
+    var offset = stream.initialOffset().asInstanceOf[KplShardOffsets]
+    for (parentEnd <- Seq(20L, 40L, 50L)) {
+      calls.clear()
+      offset = stream.latestOffset(offset, ReadLimit.maxRows(20)).asInstanceOf[KplShardOffsets]
+      offset shouldBe KplShardOffsets(Map("parent" -> parentEnd, "child-a" -> 0L, "child-b" -> 0L))
+      withClue(s"trigger ending the parent at $parentEnd: ") {
+        calls.getOrDefault("child-a", 0) shouldBe 0
+        calls.getOrDefault("child-b", 0) shouldBe 0
+        calls.get("parent") should be > 0
+      }
+    }
+    // The parent is drained: the children are admitted, probed and split
+    // the budget.
+    calls.clear()
+    stream.latestOffset(offset, ReadLimit.maxRows(20)) shouldBe
+      KplShardOffsets(Map("parent" -> 50L, "child-a" -> 10L, "child-b" -> 10L))
+    calls.get("child-a") should be > 0
+    calls.get("child-b") should be > 0
   }
 
   // ---- the Kinesis-API-shaped backend carries the lineage ------------------

@@ -73,16 +73,20 @@ object BudgetedKinesisBackend {
     ShardRecord(i, 1000 + i, s"pk$i", Array.emptyByteArray))))
 }
 
-/** [[KinesisShardBackend]] at page size 30 over [[BudgetedKinesisBackend.api]],
-  * loadable by class name through [[BackendSpec]]. */
-class BudgetedKinesisBackend(options: Map[String, String]) extends ShardBackend {
-  private val inner = new KinesisShardBackend(BudgetedKinesisBackend.api, "s", pageSize = 30)
+/** A [[KinesisShardBackend]] over a fixed stub, for subclasses loadable by
+  * class name through [[BackendSpec]]. */
+abstract class StubKinesisBackend(api: KinesisDataApi, pageSize: Int) extends ShardBackend {
+  private val inner = new KinesisShardBackend(api, "s", pageSize)
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
   override def latestPosition(shard: String, from: Long, limit: Long): Long =
     inner.latestPosition(shard, from, limit)
   override def read(shard: String, from: Long, until: Long): Seq[ShardRecord] =
     inner.read(shard, from, until)
 }
+
+/** Page size 30 over [[BudgetedKinesisBackend.api]]. */
+class BudgetedKinesisBackend(options: Map[String, String])
+    extends StubKinesisBackend(BudgetedKinesisBackend.api, pageSize = 30)
 
 class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
 
