@@ -32,24 +32,29 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    [[KinesisHttpApi.getShardIterator]]), a persisted anchor
   *    pins the committed ordinal space to a stream-absolute coordinate.
   *
-  * Persistence is write-behind: a snapshot every `persistEvery` recorded
+  * Persistence is write-behind: a snapshot every [[PersistEvery]] recorded
   * anchors (atomic tmp-write + rename; concurrent writers on a shared FS
   * each produce a complete snapshot, last rename wins). A crash loses at
-  * most the last `persistEvery` pages of anchors — a resume then floors
-  * onto a slightly older anchor and the seam's range filter drops the
-  * overlap; never a correctness loss. Snapshot writes are best-effort: a
+  * most the last [[PersistEvery]] pages of anchors — a resume then floors
+  * onto a slightly older anchor and [[KinesisShardBackend]]'s walk drops
+  * the overlap; never a correctness loss. Snapshot writes are best-effort: a
   * persistence failure degrades restart cost, so it warns instead of
   * failing the batch.
   */
 object KinesisAnchorStore {
 
+  /** Anchors kept per shard; the lowest positions are evicted past it. */
+  val MaxAnchorsPerShard = 8192
+
+  /** Recorded anchors between two durable snapshots. */
+  val PersistEvery = 16
+
   final case class Key(
       endpoint: String, stream: String, shard: String, anchorDir: Option[String])
 
-  /** One shard's anchors: a bounded skip-list (oldest positions evicted
-    * past `maxAnchors`) plus the optional durable snapshot. */
-  final class ShardAnchors private[sources] (
-      key: Key, maxAnchors: Int, persistEvery: Int) {
+  /** One shard's anchors: a bounded skip-list (lowest positions evicted
+    * past [[MaxAnchorsPerShard]]) plus the optional durable snapshot. */
+  final class ShardAnchors private[sources] (key: Key) {
 
     private val map = new java.util.concurrent.ConcurrentSkipListMap[Long, String]()
     private val sincePersist = new java.util.concurrent.atomic.AtomicInteger(0)
@@ -72,7 +77,7 @@ object KinesisAnchorStore {
               line = in.readLine()
             }
           } finally in.close()
-          while (map.size() > maxAnchors) map.pollFirstEntry()
+          while (map.size() > MaxAnchorsPerShard) map.pollFirstEntry()
         }
       } catch {
         case e: Exception =>
@@ -83,19 +88,17 @@ object KinesisAnchorStore {
     }
 
     /** Record the anchor for one served page; snapshots every
-      * `persistEvery` records when durable. */
+      * [[PersistEvery]] records when durable. */
     def record(position: Long, sequence: String): Unit = {
       map.put(position, sequence)
-      while (map.size() > maxAnchors) map.pollFirstEntry()
+      while (map.size() > MaxAnchorsPerShard) map.pollFirstEntry()
       if (key.anchorDir.isDefined &&
-          sincePersist.incrementAndGet() >= persistEvery) persist()
+          sincePersist.incrementAndGet() >= PersistEvery) persist()
     }
 
     /** Nearest anchor at-or-below `position`, if retained. */
     def floor(position: Long): Option[(Long, String)] =
       Option(map.floorEntry(position)).map(e => (e.getKey, e.getValue))
-
-    def size: Int = map.size()
 
     private def snapshotPath(dir: String): org.apache.hadoop.fs.Path = {
       // The store key includes the ENDPOINT (two endpoints are distinct
@@ -164,8 +167,8 @@ object KinesisAnchorStore {
   private val stores =
     new java.util.concurrent.ConcurrentHashMap[Key, ShardAnchors]()
 
-  def forShard(key: Key, maxAnchors: Int, persistEvery: Int): ShardAnchors =
-    stores.computeIfAbsent(key, k => new ShardAnchors(k, maxAnchors, persistEvery))
+  def forShard(key: Key): ShardAnchors =
+    stores.computeIfAbsent(key, k => new ShardAnchors(k))
 
   /** TEST HOOK: drop every in-memory store (durable snapshots remain) —
     * simulates process death for fresh-process resume specs. */

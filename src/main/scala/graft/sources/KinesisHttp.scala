@@ -21,17 +21,21 @@ import com.fasterxml.jackson.databind.ObjectMapper
   * numbers are 186-bit decimals whose high-order bits encode ingestion
   * time, so `sequence − base` deltas would NOT fit a long on a live stream
   * (they are ~10³⁸). Each served page records an ANCHOR (`position after
-  * the page` → `last record's real sequence string`), so a later range read at position `from` resumes with
-  * `AFTER_SEQUENCE_NUMBER` of the nearest anchor at-or-below `from` (the
-  * seam's range filter drops the ≤ page-size overlap). Anchors live in
+  * the page` → `last record's real sequence string`).
+  * [[getShardIterator]] is the one way this transport opens a shard at a
+  * position: `AFTER_SEQUENCE_NUMBER` of the nearest anchor at-or-below
+  * `from`. A range read, a backlog probe and the re-open of an expired
+  * iterator all come through it. Anchors live in
   * the PROCESS-WIDE [[KinesisAnchorStore]] — never per-instance, because
   * the DSv2 reader constructs a fresh backend per partition per
   * micro-batch — and, when an `anchorDir` is configured (the micro-batch
   * scan injects `<checkpointLocation>/graft-anchors`), they are
   * snapshotted to durable storage so a RESTARTED process also resumes
-  * positioned. Only when no anchor exists anywhere (first contact, or a
-  * resume below the eviction horizon) does a read fall back to one
-  * TRIM_HORIZON re-enumeration + range filter — correct while the
+  * positioned. Only when no anchor is usable (first contact, a resume
+  * below the eviction horizon, or an anchor the service rejects) does an
+  * open fall back to TRIM_HORIZON. That opens early, never late, and
+  * [[KinesisShardBackend]] keeps no position twice, so it costs pages,
+  * never duplicates. It is correct while the
   * shard's readable start is where the committed ordinals started, but
   * if retention TRIMMED the shard in between, the re-counted ordinals
   * shift relative to the committed offsets; the fallback therefore logs
@@ -52,9 +56,7 @@ final class KinesisHttpApi(
     endpoint: String,
     region: String,
     creds: AwsCredentials,
-    anchorDir: Option[String] = None,
-    anchorPersistEvery: Int = 16,
-    maxAnchorsPerShard: Int = 8192) extends KinesisDataApi {
+    anchorDir: Option[String] = None) extends KinesisDataApi {
 
   import KinesisHttpApi.MaxRetries
   import KinesisWireJson._
@@ -67,14 +69,11 @@ final class KinesisHttpApi(
     if (endpoint.endsWith("/")) endpoint.dropRight(1) else endpoint)
 
   /** Per-token state: the stream/shard, the ordinal position of the next
-    * record the iterator will yield, the anchor store pages write into,
-    * and the REAL sequence string of the last record this iterator
-    * LINEAGE consumed (the exact `AFTER_SEQUENCE_NUMBER` re-acquire point
-    * when the server expires the token mid-drain — seeded with the resume
-    * anchor for positioned lineages). */
+    * record the iterator will yield, and the anchor store pages write
+    * into. */
   private final case class IterState(
       streamName: String, shardId: String, nextPos: Long,
-      anchors: KinesisAnchorStore.ShardAnchors, lastSeq: Option[String])
+      anchors: KinesisAnchorStore.ShardAnchors)
 
   /** live iterator token → [[IterState]]. Tokens are opaque, so GetRecords
     * responses must be attributed here. BOUNDED LRU: latestPosition probes
@@ -93,8 +92,7 @@ final class KinesisHttpApi(
 
   private def anchorsFor(streamName: String, shardId: String) =
     KinesisAnchorStore.forShard(
-      KinesisAnchorStore.Key(endpoint, streamName, shardId, anchorDir),
-      maxAnchorsPerShard, anchorPersistEvery)
+      KinesisAnchorStore.Key(endpoint, streamName, shardId, anchorDir))
 
   private val RetryableTypes = Set(
     "ProvisionedThroughputExceededException", "ThrottlingException",
@@ -184,111 +182,64 @@ final class KinesisHttpApi(
       }
       val (shards, next) =
         parseListShardsPage(post("Kinesis_20131202.ListShards", body))
-      out ++= shards.map(_.toMeta)
+      out ++= shards
       token = next
     }
     out
   }
 
-  /** TRIM_HORIZON iterators start the ordinal position space at 0. */
-  private def trimHorizon(streamName: String, shardId: String): String = {
-    val body = obj("StreamName" -> streamName, "ShardId" -> shardId,
-      "ShardIteratorType" -> "TRIM_HORIZON")
-    register(
-      parseShardIterator(post("Kinesis_20131202.GetShardIterator", body)),
-      IterState(streamName, shardId, nextPos = 0L, anchorsFor(streamName, shardId),
-        lastSeq = None))
-  }
-
+  /** Opens `shardId` at ordinal `from`: TRIM_HORIZON for `from <= 0`,
+    * else `AFTER_SEQUENCE_NUMBER` of the nearest anchor at-or-below `from`,
+    * numbered from the anchor's position. The store is process-wide and
+    * (with anchorDir) snapshot-backed, so fresh per-partition transports
+    * AND restarted processes open positioned. When no anchor is usable the
+    * open falls back to TRIM_HORIZON, which is early, never late. */
   override def getShardIterator(streamName: String, shardId: String,
                                 from: Long): String = {
-    if (from <= 0L) return trimHorizon(streamName, shardId)
     val store = anchorsFor(streamName, shardId)
-    // Nearest anchor at-or-below the requested position: resume with
-    // AFTER_SEQUENCE_NUMBER of the real sequence recorded there; the
-    // caller's range filter drops the ≤ page-size overlap. The store is
-    // process-wide and (with anchorDir) snapshot-backed, so fresh
-    // per-partition backend instances AND restarted processes resume
-    // positioned — only a resume below the eviction horizon, or a truly
-    // anchorless shard, pays the TRIM_HORIZON fallback.
-    store.floor(from) match {
+    def open(nextPos: Long, position: (String, String)*): String = register(
+      parseShardIterator(post("Kinesis_20131202.GetShardIterator", obj(
+        Seq("StreamName" -> streamName, "ShardId" -> shardId) ++ position: _*))),
+      IterState(streamName, shardId, nextPos, store))
+    val trimHorizon = "ShardIteratorType" -> "TRIM_HORIZON"
+    if (from <= 0L) return open(0L, trimHorizon)
+    val reason = store.floor(from) match {
       case Some((anchorPos, anchorSeq)) =>
-        val body = obj("StreamName" -> streamName, "ShardId" -> shardId,
-          "ShardIteratorType" -> "AFTER_SEQUENCE_NUMBER",
+        // Any other failure propagates and fails the batch rather than
+        // turn a positioned read into a full-shard drain.
+        try return open(anchorPos, "ShardIteratorType" -> "AFTER_SEQUENCE_NUMBER",
           "StartingSequenceNumber" -> anchorSeq)
-        try register(
-          parseShardIterator(post("Kinesis_20131202.GetShardIterator", body)),
-          IterState(streamName, shardId, nextPos = anchorPos, store,
-            lastSeq = Some(anchorSeq)))
         catch {
-          // ONLY a genuine position rejection falls back to TRIM_HORIZON
-          // (the anchor aged past retention, crossed a reshard, or the
-          // parent shard was deleted — the documented non-transient
-          // GetShardIterator failures): a transient transport/throttle
-          // failure must propagate and fail the batch — a blanket
-          // fallback would silently convert a cheap positioned read into
-          // a full-shard drain.
-          case e: KinesisApiException
-              if PositionGoneTypes(e.errorType) =>
-            System.err.println(
-              s"[graft] kinesis: resume anchor for $shardId rejected " +
-                s"(${e.errorType}); re-enumerating from TRIM_HORIZON once. " +
-                "WARNING: if retention trimmed this shard since the offsets " +
-                "were committed, re-counted ordinals are SHIFTED vs the " +
-                "committed positions — records may be skipped; re-seed the " +
-                "query from a fresh checkpoint if exactness is required")
-            trimHorizon(streamName, shardId)
+          case e: KinesisApiException if PositionGoneTypes(e.errorType) =>
+            s"its resume anchor was rejected (${e.errorType})"
         }
       case None =>
-        // No anchor anywhere (first contact with this shard, snapshot
-        // missing, or resume below the eviction horizon): one
-        // re-enumeration from the shard's readable start; the range
-        // filter re-aligns. Correct only while the readable start is
-        // where the committed ordinal space started — hence the loud
-        // warning about retention trimming.
-        System.err.println(
-          s"[graft] kinesis: no resume anchor for $shardId@$from " +
-            "(fresh process without a persisted snapshot, or resume below " +
-            "the anchor-eviction horizon); re-enumerating from TRIM_HORIZON " +
-            "once. WARNING: if retention trimmed this shard since the " +
-            "offsets were committed, re-counted ordinals are SHIFTED vs the " +
-            "committed positions — records may be skipped; configure " +
-            "anchorDir (on by default under a checkpoint) to avoid this path")
-        trimHorizon(streamName, shardId)
+        "it has no resume anchor (first contact, a fresh process without a " +
+          "persisted snapshot, or a resume below the anchor-eviction horizon)"
     }
+    System.err.println(
+      s"[graft] kinesis: opening $shardId@$from from TRIM_HORIZON because " +
+        s"$reason. WARNING: if retention trimmed this shard since the " +
+        "offsets were committed, re-counted ordinals are SHIFTED vs the " +
+        "committed positions — records may be skipped; configure anchorDir " +
+        "(on by default under a checkpoint), or re-seed the query from a " +
+        "fresh checkpoint if exactness is required")
+    open(0L, trimHorizon)
   }
 
-  /** Re-acquire an iterator for an EXPIRED token's lineage, positioned
-    * exactly where the expired one was. Real iterators expire 5 minutes
-    * after issuance — any pause between acquiring and consuming (GC,
-    * backpressure, a slow micro-batch, a driver checkpoint stall) hits
-    * this on a live stream, and the reference's core loop simply keeps
-    * reading (`kinesisReader/index.js:84-108`); the data is still there,
-    * so this must NOT fall back to TRIM_HORIZON re-enumeration when the
-    * lineage has a consumed position. Resume point, in order:
-    * `AFTER_SEQUENCE_NUMBER` of the lineage's last-consumed real sequence
-    * (exact — no duplicate, no gap); else TRIM_HORIZON when nothing was
-    * consumed yet — also exact, `nextPos` is still 0. */
-  private def reacquireExpired(st: IterState): String = {
-    val body = st.lastSeq match {
-      case Some(seq) =>
-        obj("StreamName" -> st.streamName, "ShardId" -> st.shardId,
-          "ShardIteratorType" -> "AFTER_SEQUENCE_NUMBER",
-          "StartingSequenceNumber" -> seq)
-      case None =>
-        obj("StreamName" -> st.streamName, "ShardId" -> st.shardId,
-          "ShardIteratorType" -> "TRIM_HORIZON")
-    }
-    parseShardIterator(post("Kinesis_20131202.GetShardIterator", body))
-  }
-
+  /** One GetRecords page. Real iterators expire 5 minutes after issuance,
+    * and any pause between acquiring and consuming (GC, backpressure, a
+    * slow micro-batch) hits that on a live stream; the reference's loop
+    * simply keeps reading (`kinesisReader/index.js:84-108`). So an expired
+    * token re-opens its lineage at its own position through
+    * [[getShardIterator]]: the page before recorded an anchor exactly
+    * there, or the lineage is still at 0. */
   override def getRecords(iterator: String, limit: Int)
       : (Seq[ShardRecord], Option[String], Long) = {
-    val st = Option(iteratorState.remove(iterator)).getOrElse(
+    var st = Option(iteratorState.remove(iterator)).getOrElse(
       sys.error("getRecords called with an iterator this transport did not issue"))
-    // Expired-iterator recovery: re-acquire from the lineage's own state
-    // and retry — bounded (a freshly re-acquired token expiring again
-    // means the pause is systemic; propagate rather than spin).
+    // Bounded: a freshly opened token expiring again means the pause is
+    // systemic; propagate rather than spin.
     var token = iterator
     var page: KinesisWireJson.GetRecordsPage = null
     var expiries = 0
@@ -301,10 +252,9 @@ final class KinesisHttpApi(
           expiries += 1
           System.err.println(
             s"[graft] kinesis: iterator for ${st.shardId} expired " +
-              s"(server-side TTL); re-acquiring at " +
-              st.lastSeq.fold("the lineage start")(s =>
-                s"AFTER_SEQUENCE_NUMBER $s") + " and resuming")
-          token = reacquireExpired(st)
+              s"(server-side TTL); re-opening at position ${st.nextPos}")
+          token = getShardIterator(st.streamName, st.shardId, st.nextPos)
+          st = iteratorState.remove(token)
       }
     }
     val nextPos = st.nextPos + page.records.size
@@ -313,13 +263,8 @@ final class KinesisHttpApi(
     // in the store.
     page.records.lastOption.foreach(last =>
       st.anchors.record(nextPos, last.sequence.toString))
-    // the lineage's last-consumed sequence rides every page turn, so a
-    // LATER expiry re-acquires exactly after what this page consumed
-    val lastSeq = page.records.lastOption
-      .map(_.sequence.toString).orElse(st.lastSeq)
     (page.shardRecords(st.nextPos),
-      page.nextShardIterator.map(register(_,
-        st.copy(nextPos = nextPos, lastSeq = lastSeq))),
+      page.nextShardIterator.map(register(_, st.copy(nextPos = nextPos))),
       page.millisBehindLatest)
   }
 }
@@ -371,8 +316,7 @@ final class KinesisHttpBackend(options: Map[String, String]) extends ShardBacken
       // survive process restarts wherever the checkpoint survives.
       anchorDir = options.get("anchorDir").filter(_.nonEmpty)),
     options.getOrElse("streamName",
-      sys.error("kinesis http backend: missing streamName")),
-    pageSize = options.getOrElse("maxRecordsPerFetch", "1000").toInt)
+      sys.error("kinesis http backend: missing streamName")))
   override def shardMetas(): Seq[ShardMeta] = inner.shardMetas()
   override def latestPosition(shard: String, from: Long, limit: Long): Long =
     inner.latestPosition(shard, from, limit)

@@ -63,35 +63,25 @@ object KinesisWireJson {
     v
   }
 
-  /** One ListShards shard entry with the metadata the transports need:
-    * for CLOSED shards only, `SequenceNumberRange.EndingSequenceNumber`
-    * (its presence IS the closed flag), and the reshard lineage
-    * (`ParentShardId`, plus `AdjacentParentShardId` on a merge child) that
-    * drives parent-before-child admission ([[ReshardAdmission]]). */
-  final case class ShardInfo(
-      shardId: String,
-      endingSequence: Option[BigInt],
-      parentIds: Seq[String] = Nil) {
-    def closed: Boolean = endingSequence.isDefined
-    def toMeta: ShardMeta = ShardMeta(shardId, parentIds, closed)
-  }
-
-  /** ListShards page with pagination: `(shards, NextToken)`. The live
-    * transport loops until `NextToken` is absent (the service pages at
-    * 1000 shards — at production shard counts a single page is NOT the
-    * common case). */
-  def parseListShardsPage(json: String): (Seq[ShardInfo], Option[String]) = {
+  /** ListShards page with pagination: `(shards, NextToken)`. Each entry
+    * becomes a [[ShardMeta]]: closed ⇔
+    * `SequenceNumberRange.EndingSequenceNumber` present, and the reshard
+    * lineage (`ParentShardId`, plus `AdjacentParentShardId` on a merge
+    * child) that drives parent-before-child admission
+    * ([[ReshardAdmission]]). The live transport loops until `NextToken` is
+    * absent (the service pages at 1000 shards — at production shard
+    * counts a single page is NOT the common case). */
+  def parseListShardsPage(json: String): (Seq[ShardMeta], Option[String]) = {
     val n = node(json)
     val shards = req(n, "Shards", "ListShards response").elements().asScala.map { s =>
       val range = req(s, "SequenceNumberRange", "ListShards.Shards[]")
       def optText(field: String): Option[String] =
         Option(s.get(field)).filter(!_.isNull).map(_.asText()).filter(_.nonEmpty)
-      ShardInfo(
+      ShardMeta(
         shardId = req(s, "ShardId", "ListShards.Shards[]").asText(),
-        endingSequence = Option(range.get("EndingSequenceNumber"))
-          .filter(!_.isNull).map(e => BigInt(e.asText())),
         parentIds =
-          (optText("ParentShardId") ++ optText("AdjacentParentShardId")).toSeq)
+          (optText("ParentShardId") ++ optText("AdjacentParentShardId")).toSeq,
+        closed = Option(range.get("EndingSequenceNumber")).exists(!_.isNull))
     }.toSeq
     (shards, Option(n.get("NextToken")).filter(!_.isNull).map(_.asText()))
   }
@@ -151,13 +141,13 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
 
   private def readFile(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
 
-  private val infos: Seq[ShardInfo] =
+  private val listed: Seq[ShardMeta] =
     parseListShardsPage(readFile(Paths.get(dir, "list_shards.json")))._1
 
   /** shard → decoded pages, in recorded order. */
   private val pages: Map[String, IndexedSeq[GetRecordsPage]] =
-    infos.map { info =>
-      val shardDir = Paths.get(dir, info.shardId)
+    listed.map { m =>
+      val shardDir = Paths.get(dir, m.shardId)
       val files =
         if (Files.isDirectory(shardDir)) {
           val stream = Files.list(shardDir)
@@ -166,7 +156,7 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
             .toSeq.sortBy(_.getFileName.toString)
           finally stream.close()
         } else Seq.empty
-      info.shardId -> files.map(f => parseGetRecords(readFile(f))).toIndexedSeq
+      m.shardId -> files.map(f => parseGetRecords(readFile(f))).toIndexedSeq
     }.toMap
 
   /** shard → the position of each page's first record. */
@@ -177,9 +167,9 @@ final class RecordedKinesisApi(dir: String) extends KinesisDataApi {
     * `EndingSequenceNumber` OR from replay's own closed signal (the last
     * recorded page's null `NextShardIterator`), whichever the session
     * captured. */
-  private val metas: Seq[ShardMeta] = infos.map { info =>
-    val replayClosed = pages(info.shardId).lastOption.exists(_.nextShardIterator.isEmpty)
-    ShardMeta(info.shardId, info.parentIds, info.closed || replayClosed)
+  private val metas: Seq[ShardMeta] = listed.map { m =>
+    m.copy(closed = m.closed ||
+      pages(m.shardId).lastOption.exists(_.nextShardIterator.isEmpty))
   }
 
   override def listShards(streamName: String): Seq[ShardMeta] = metas

@@ -28,11 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2).
   *    It also bounds each trigger's backlog probe: a store that pages to
   *    find a shard's end pages at most that many records past the
-  *    committed offset. [[KinesisHttpBackend]] reads the same option as
-  *    its GetRecords page size, with default 1,000; each call asks for at
-  *    most the records a trigger still wants, so that page size binds only
-  *    where no row budget applies (the `AvailableNow` pin, and read limits
-  *    other than `maxRows`);
+  *    committed offset. It is the row budget only: the GetRecords page
+  *    size is [[KinesisShardBackend]]'s own (1,000), which binds where no
+  *    row budget applies (the `AvailableNow` pin, the batch scan, and read
+  *    limits other than `maxRows`);
   *  - rows carry the Kinesis envelope (`data` still KPL-aggregated —
   *    de-aggregation is the downstream [[graft.plans.KplExplode]]
   *    generator, exactly as in the reference pipeline).

@@ -167,8 +167,12 @@ object BackendSpec {
   *    read from TRIM_HORIZON yields 0, 1, 2, … whatever the gaps between
   *    the underlying sequence numbers;
   *  - open [[getShardIterator]] at or before `from`, never after it.
-  *    [[KinesisShardBackend]] drops records below `from`, so an early
-  *    start costs pages, not correctness.
+  *    [[KinesisShardBackend]] keeps only positions its walk has not
+  *    passed, so an early open, at the start or after re-opening an
+  *    expired iterator, costs pages, never duplicates.
+  *
+  * [[getShardIterator]] is an adapter's one way to open a shard at a
+  * position, so the probe, the read and any re-open meet the same rule.
   */
 trait KinesisDataApi extends Serializable {
   /** ListShards → every shard with its lineage ([[ShardMeta]]): the
@@ -176,9 +180,9 @@ trait KinesisDataApi extends Serializable {
     * `EndingSequenceNumber` present. */
   def listShards(streamName: String): Seq[ShardMeta]
 
-  /** GetShardIterator at position `from`; `from <= 0` is TRIM_HORIZON. The
-    * reference's AT_TIMESTAMP lookback is a plan filter here
-    * ([[graft.api.RecordsQuery.lookback]]), not an iterator type. */
+  /** GetShardIterator at position `from`, or before it; `from <= 0` is
+    * TRIM_HORIZON. The reference's AT_TIMESTAMP lookback is a plan filter
+    * here ([[graft.api.RecordsQuery.lookback]]), not an iterator type. */
   def getShardIterator(streamName: String, shardId: String, from: Long): String
 
   /** GetRecords page: (records, nextIterator, millisBehindLatest).
@@ -197,9 +201,11 @@ trait KinesisDataApi extends Serializable {
   * [[KinesisShardBackend.StallPages]] pages in a row without a new
   * position end the loop: the probe then under-reports, which is safe,
   * and the read throws (see [[read]]). Positions are the adapter's
-  * ordinals. */
+  * ordinals. `pageSize` caps each GetRecords `Limit`; the trigger's row
+  * budget (`maxRecordsPerFetch`) bounds what the probe asks for, not the
+  * page. */
 final class KinesisShardBackend(
-    api: KinesisDataApi, streamName: String, pageSize: Int = 100)
+    api: KinesisDataApi, streamName: String, pageSize: Int = 1000)
     extends ShardBackend {
 
   import KinesisShardBackend.{MaxProbePages, StallPages}
@@ -211,14 +217,16 @@ final class KinesisShardBackend(
     * position reaches `until`, the shard closes, the service reports it
     * caught up (`millisBehindLatest == 0`), `maxPages` pages were read, or
     * [[StallPages]] pages in a row brought no new position (empty or
-    * repeated). Hands `keep` each record in `[from, until)`. Returns the
+    * repeated). Hands `keep` each record in `[from, until)` once: a page
+    * that repeats positions the walk has passed (an iterator opened or
+    * re-opened early) keeps none of them. Returns the
     * position after the newest record seen, within `[from, until]`, and
     * whether the loop ended on a stall. */
   private def walk(shard: String, from: Long, until: Long, maxPages: Int)
                   (keep: ShardRecord => Unit): (Long, Boolean) = {
     var it: Option[String] = Some(api.getShardIterator(streamName, shard, from))
     var behind = Long.MaxValue
-    // The iterator may open before `from`: its records still count as
+    // The iterator may open before `next`: such records still count as
     // progress, and none of them is kept.
     var seen = Long.MinValue
     var stalls = 0
@@ -226,9 +234,10 @@ final class KinesisShardBackend(
     def next = math.max(from, seen)
     while (it.isDefined && behind != 0L && next < until &&
            stalls < StallPages && pages < maxPages) {
+      val at = next
       val (records, nextIt, b) =
-        api.getRecords(it.get, math.min(pageSize.toLong, until - next).toInt)
-      records.foreach(r => if (r.sequence >= from && r.sequence < until) keep(r))
+        api.getRecords(it.get, math.min(pageSize.toLong, until - at).toInt)
+      records.foreach(r => if (r.sequence >= at && r.sequence < until) keep(r))
       val pageEnd = records.lastOption.fold(Long.MinValue)(_.sequence + 1)
       stalls = if (pageEnd > seen) 0 else stalls + 1
       seen = math.max(seen, pageEnd)

@@ -77,6 +77,8 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     * evidence for positioned-vs-TRIM_HORIZON resume assertions. */
   private val iterRequests =
     new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+  /** Every GetRecords request's `Limit`, in arrival order. */
+  private val getRecordsLimits = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
 
   private def recJson(r: (BigInt, Long, String, Array[Byte])): String =
     s"""{"SequenceNumber": "${r._1}",
@@ -165,6 +167,7 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
             s"$shardId@$idx".getBytes(UTF_8))}"}""")
 
       case "Kinesis_20131202.GetRecords" =>
+        num("Limit").foreach(l => getRecordsLimits.add(l.toDouble.toInt))
         if (throttleOnce.compareAndSet(true, false))
           (400, """{"__type": "ProvisionedThroughputExceededException", "message": "slow down"}""")
         else if (expireOnce.compareAndSet(true, false))
@@ -291,10 +294,12 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     val anchorDir = java.nio.file.Files
       .createTempDirectory("graft_anchor_spec").toString
     def apiWithDir() = new KinesisHttpApi(endpoint, region, creds,
-      anchorDir = Some(anchorDir), anchorPersistEvery = 1)
-    // first life: drain the shard, snapshotting an anchor per page
-    new KinesisShardBackend(apiWithDir(), stream, pageSize = 2)
-      .read("shardId-000000000000", 0L, 3L) should have size 3
+      anchorDir = Some(anchorDir))
+    // first life: drain the shard until PersistEvery anchors were recorded
+    // (2 per drain at page size 2), so the store writes its snapshot
+    for (_ <- 1 to KinesisAnchorStore.PersistEvery / 2)
+      new KinesisShardBackend(apiWithDir(), stream, pageSize = 2)
+        .read("shardId-000000000000", 0L, 3L) should have size 3
     // process death: in-memory stores gone, snapshot files remain
     KinesisAnchorStore.dropInMemory()
     iterRequests.clear()
@@ -306,18 +311,21 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
 
   test("resume below the anchor-eviction horizon falls back to TRIM_HORIZON, still exact") {
     KinesisAnchorStore.dropInMemory()
-    // cap of 1 anchor per shard: after a pageSize-1 drain only the LAST
-    // page's anchor survives, so a resume at position 1 has no floor
-    // anchor and must pay the (loud, logged) TRIM_HORIZON fallback —
-    // exactness comes from the seam's range filter, not the anchor.
-    def cappedApi() = new KinesisHttpApi(endpoint, region, creds,
-      maxAnchorsPerShard = 1)
-    new KinesisShardBackend(cappedApi(), stream, pageSize = 1)
+    new KinesisShardBackend(newApi(), stream, pageSize = 1)
       .read("shardId-000000000000", 0L, 3L) should have size 3
+    // MaxAnchorsPerShard + 1 anchors above the drain's evict every anchor
+    // the drain recorded, so a resume at position 1 has no floor anchor
+    // and must pay the (loud, logged) TRIM_HORIZON fallback — exactness
+    // comes from the walk, not the anchor.
+    val store = KinesisAnchorStore.forShard(
+      KinesisAnchorStore.Key(endpoint, stream, "shardId-000000000000", None))
+    for (i <- 1 to KinesisAnchorStore.MaxAnchorsPerShard + 1)
+      store.record(3L + i, "0")
     iterRequests.clear()
-    val be = new KinesisShardBackend(cappedApi(), stream, pageSize = 1)
+    val be = new KinesisShardBackend(newApi(), stream, pageSize = 1)
     be.read("shardId-000000000000", 1L, 3L).map(_.sequence) shouldBe Seq(1L, 2L)
     iterRequests.asScala.map(_._2) should contain("TRIM_HORIZON")
+    KinesisAnchorStore.dropInMemory() // the recorded anchors point nowhere
   }
 
   test("expired iterator mid-drain: re-acquire AFTER the last consumed sequence — no duplicate, no gap") {
@@ -354,6 +362,38 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
     expireOnce.set(true)
     val (recs, _, _) = api.getRecords(it, 10)
     recs.map(_.sequence) shouldBe Seq(0L, 1L, 2L)
+  }
+
+  test("an expired iterator whose anchor is gone re-opens early; the read keeps each position once") {
+    KinesisAnchorStore.dropInMemory()
+    iterRequests.clear()
+    val api = newApi()
+    // Before the second page, the anchor the first page recorded is
+    // dropped and the server expires the continuation token: the re-open
+    // finds no anchor at position 2 and falls back to TRIM_HORIZON.
+    var pages = 0
+    val dropping = new KinesisDataApi {
+      override def listShards(streamName: String): Seq[ShardMeta] =
+        api.listShards(streamName)
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String =
+        api.getShardIterator(streamName, shardId, from)
+      override def getRecords(iterator: String, limit: Int)
+          : (Seq[ShardRecord], Option[String], Long) = {
+        pages += 1
+        if (pages == 2) {
+          KinesisAnchorStore.dropInMemory()
+          expireOnce.set(true)
+        }
+        api.getRecords(iterator, limit)
+      }
+    }
+    val got = new KinesisShardBackend(dropping, stream, pageSize = 2)
+      .read("shardId-000000000000", 0L, 3L)
+    expireOnce.get() shouldBe false // the expiry really fired
+    got.map(_.sequence) shouldBe Seq(0L, 1L, 2L)
+    got.map(_.partitionKey) shouldBe Seq("partitionKey-0", "partitionKey-1", "pk-agg")
+    iterRequests.size shouldBe 2 // the first open, and the re-open
   }
 
   test("a range read through a fresh transport sends no ListShards request") {
@@ -412,5 +452,23 @@ class KinesisHttpSpec extends AnyFunSuite with Matchers with SparkSpec
 
     requestCount.get() should be > 0
     sigFailures.asScala.toSeq shouldBe Seq.empty
+  }
+
+  test("maxRecordsPerFetch is the row budget only, never the live GetRecords page size") {
+    getRecordsLimits.clear()
+    val df = spark.read.format(KplFileSource.ProviderClass)
+      .option("backend", classOf[KinesisHttpBackend].getName)
+      .option("endpoint", endpoint)
+      .option("region", region)
+      .option("streamName", stream)
+      .option("accessKeyId", creds.accessKeyId)
+      .option("secretAccessKey", creds.secretAccessKey)
+      .option("maxRecordsPerFetch", "1")
+      .load()
+    df.selectExpr("sequenceNumber").collect().map(_.getString(0)).sorted shouldBe
+      Array("0", "0", "1", "2")
+    val limits = getRecordsLimits.asScala.toSeq
+    limits should not be empty
+    limits should not contain 1
   }
 }

@@ -139,7 +139,7 @@ class ReshardSpec extends AnyFunSuite with Matchers with SparkSpec {
         |]}""".stripMargin
     val (infos, next) = KinesisWireJson.parseListShardsPage(json)
     next shouldBe None
-    infos.map(_.toMeta) shouldBe Seq(
+    infos shouldBe Seq(
       ShardMeta("shardId-000", Nil, closed = true),
       ShardMeta("shardId-001", Seq("shardId-000"), closed = false),
       ShardMeta("shardId-002", Seq("shardId-000", "shardId-001"), closed = false))

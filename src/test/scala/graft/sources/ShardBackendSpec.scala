@@ -220,6 +220,29 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     assertThrows[IllegalStateException](be.read("shardId-000", 0L, 100L))
   }
 
+  test("a page that repeats positions the read already kept is not kept twice") {
+    // An iterator re-opened early (an expired lineage whose anchor is
+    // gone) serves again positions the walk has passed.
+    val reopened = new KinesisDataApi {
+      override def listShards(streamName: String): Seq[ShardMeta] =
+        Seq(ShardMeta("shardId-000", Nil, closed = false))
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String = "first"
+      override def getRecords(iterator: String, limit: Int)
+          : (Seq[ShardRecord], Option[String], Long) = {
+        def page(ps: Long*) = ps.map(p => rec(p, 1000 + p, s"a$p"))
+        iterator match {
+          case "first" => (page(0, 1), Some("early"), 999L)
+          case "early" => (page(0, 1, 2, 3), Some("last"), 999L)
+          case _ => (page(4), Some("end"), 0L)
+        }
+      }
+    }
+    val be = new KinesisShardBackend(reopened, "s", pageSize = 2)
+    be.read("shardId-000", 0L, 5L).map(_.sequence) shouldBe (0L until 5L)
+    be.read("shardId-000", 1L, 5L).map(_.sequence) shouldBe (1L until 5L)
+  }
+
   test("an advancing adapter with underfilled pages completes a large range (no page-count trap)") {
     // 1 record per page regardless of the requested limit: 500 pages for a
     // 500-record range. Progress resets the guard, so this must succeed.
