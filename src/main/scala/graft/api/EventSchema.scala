@@ -53,14 +53,6 @@ object EventSchema {
       StructField(AgentEventClass, agentEvent)))),
     StructField("tenantId", tenantIdStruct)))
 
-  /** Corrupt-record column name, mirroring the reference's fallback object
-    * `{"INVALID JSON": <raw>}` (`kinesisReader/index.js:113-116`). */
-  val CorruptField = "INVALID JSON"
-
-  /** [[schema]] plus the corrupt-record column for PERMISSIVE parsing. */
-  val schemaWithCorrupt: StructType =
-    schema.add(StructField(CorruptField, StringType))
-
   // Filter-target paths (backticks guard the dotted class-name field).
   private def contactPath(leaf: String): Column =
     col(s"event.baseEventData.`$ContactEventClass`.mediaScopeIdentification.contactIdentification.$leaf.long")
@@ -85,9 +77,10 @@ object EventSchema {
 
   /** Parse the UTF-8 JSON `payload` column into `event` (typed) + raw `json`.
     *
-    * PERMISSIVE mode with `columnNameOfCorruptRecord` reproduces the
-    * reference's `{"INVALID JSON": raw}` fallback as a populated
-    * `event.`INVALID JSON`` field instead of a dropped or poisoned row.
+    * `from_json` decodes with [[schema]], PERMISSIVE: invalid JSON never
+    * matches a filter (the pipeline echoes its text, not the reference's
+    * `{"INVALID JSON": raw}`), and with no options the optimizer narrows
+    * each decode to the one top-level field its filters read.
     *
     * Raw id guard (filter before you parse): given the query's numeric
     * `ids`, `from_json` reads `json` only where the payload's bytes contain
@@ -120,13 +113,6 @@ object EventSchema {
       .reduceOption(_ && _).fold(json)(when(_, json))
     df
       .withColumn("json", json)
-      .withColumn(
-        "event",
-        from_json(
-          input,
-          schemaWithCorrupt,
-          Map(
-            "mode" -> "PERMISSIVE",
-            "columnNameOfCorruptRecord" -> CorruptField)))
+      .withColumn("event", from_json(input, schema))
   }
 }

@@ -103,29 +103,30 @@ object RecordsQuery {
       col("approximateArrivalTimestamp") >= lit(java.sql.Timestamp.from(startTimestamp(q, now))))
 
   /** Build the full plan over an envelope DataFrame
-    * (`data: binary, approximateArrivalTimestamp: timestamp`, per
-    * SURVEY.md §1.4): [[lookback]], then [[pipeline]]. */
+    * (`data: binary, approximateArrivalTimestamp: timestamp`, SURVEY.md
+    * §1.4): [[lookback]], then [[pipeline]], projected to `json`. */
   def plan(envelope: DataFrame, q: Query, now: Instant): DataFrame =
     pipeline(lookback(envelope, q, now), q)
 
   /** The one records plan, shared by batch and stream: KPL flatten
     * (strict-drop, [[KplExplode.userRecords]]) → raw id guard → JSON
-    * decode → the query's filters, projected to `json` + `event`.
+    * decode → the query's filters, projected to `json`: `from_json` feeds
+    * only the `Filter`, and an unfiltered plan holds none.
     *
     * The guard ([[EventSchema.parse]]) hands `from_json` only payloads
     * whose bytes hold the decimal text of every numeric id the query
-    * names; any other payload decodes to a null `event`, which the filters
-    * drop. It is sound because a JSON integer has one spelling and an ASCII
-    * digit is its own byte in UTF-8, so it never drops a match and every
-    * kept row is byte-identical to the unguarded plan's. It lives inside
-    * the decode's input because subexpression elimination evaluates the
+    * names; any other payload decodes to null, which the filters drop. It
+    * is sound because a JSON integer has one spelling and an ASCII digit
+    * is its own byte in UTF-8, so it never drops a match and every kept
+    * row is byte-identical to the unguarded plan's. It lives inside the
+    * decode's input because subexpression elimination evaluates the
     * shared `from_json` before any conjunct of the filter could skip it.
     * `serverName` is not guarded (a `\u0063` escape defeats a byte test). */
   def pipeline(envelope: DataFrame, q: Query): DataFrame = {
     val ids = Seq(q.contactId, q.agentId, q.tenantId, q.agentShiftId).flatten
     EventSchema.parse(KplExplode.userRecords(envelope), ids)
       .filter(predicate(q))
-      .select(col("json"), col("event"))
+      .select(col("json"))
   }
 
   /** Validate + plan in one step, the `GET /records` analog. */

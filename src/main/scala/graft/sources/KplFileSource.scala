@@ -22,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - one input partition per shard (`shard-*.kpl` file) — the analog of
   *    one reader per Kinesis shard; the reference reads only shard '0'
   *    (`kinesisReader/index.js:77`), this source generalizes to N;
-  *  - offsets are per-shard record sequence numbers, checkpointed as JSON;
+  *  - offsets are per-shard record ordinals, checkpointed as JSON;
   *  - `maxRecordsPerFetch` (default 100, the reference's page size at
   *    `kinesisReader/index.js:22`) feeds admission control, so
   *    `Trigger.AvailableNow` reproduces the bounded catch-up loop (O2).
@@ -299,7 +299,7 @@ class KplFileScan(spec: BackendSpec, options: CaseInsensitiveStringMap)
   }
 }
 
-/** Per-shard sequence-number offsets, JSON-serialized for checkpointing. */
+/** Per-shard next-record ordinals, JSON-serialized for checkpointing. */
 case class KplShardOffsets(offsets: Map[String, Long]) extends Offset {
   override def json(): String =
     offsets.toSeq.sorted

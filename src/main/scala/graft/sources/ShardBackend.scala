@@ -213,7 +213,9 @@ final class KinesisShardBackend(
   override def shardMetas(): Seq[ShardMeta] = api.listShards(streamName)
 
   /** The one paging loop: GetRecords from an iterator opened at `from`,
-    * each call asking for `min(pageSize, records still wanted)`, until the
+    * each call asking for `min(pageSize, until - pos)`, `pos` being the
+    * iterator's position (`from`, then past the last record returned, so
+    * an early open pages up to `from` in full pages), until the
     * position reaches `until`, the shard closes, the service reports it
     * caught up (`millisBehindLatest == 0`), `maxPages` pages were read, or
     * [[StallPages]] pages in a row brought no new position (empty or
@@ -229,6 +231,7 @@ final class KinesisShardBackend(
     // The iterator may open before `next`: such records still count as
     // progress, and none of them is kept.
     var seen = Long.MinValue
+    var pos = from
     var stalls = 0
     var pages = 0
     def next = math.max(from, seen)
@@ -236,11 +239,12 @@ final class KinesisShardBackend(
            stalls < StallPages && pages < maxPages) {
       val at = next
       val (records, nextIt, b) =
-        api.getRecords(it.get, math.min(pageSize.toLong, until - at).toInt)
+        api.getRecords(it.get, math.min(pageSize.toLong, until - pos).toInt)
       records.foreach(r => if (r.sequence >= at && r.sequence < until) keep(r))
       val pageEnd = records.lastOption.fold(Long.MinValue)(_.sequence + 1)
       stalls = if (pageEnd > seen) 0 else stalls + 1
       seen = math.max(seen, pageEnd)
+      if (records.nonEmpty) pos = pageEnd
       it = nextIt
       behind = b
       pages += 1

@@ -29,7 +29,7 @@ object RecordsStream {
       q, Instant.ofEpochMilli(nowMs))
 
   /** Full streaming records pipeline: the batch plan's
-    * [[RecordsQuery.pipeline]] over the stream. */
+    * [[RecordsQuery.pipeline]] over the stream, one column, `json`. */
   def records(envelope: DataFrame, q: RecordsQuery.Query): DataFrame =
     RecordsQuery.pipeline(envelope, q)
 }

@@ -7,9 +7,12 @@ import java.time.Instant
 import org.apache.commons.codec.binary.Hex
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{Contains, JsonToStructs, Literal}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -98,10 +101,11 @@ class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
     utf8(""))
 
   /** Each query with the indices of the payloads it keeps. Truncated JSON
-    * keeps the leaves parsed before the break (25 still has its contact). */
+    * (25, 26) is invalid and matches no filter, as in the reference, whose
+    * `JSON.parse` rejects it. */
   private val queries: Seq[(RecordsQuery.Query, Seq[Int])] = Seq(
     query() -> payloads.indices,
-    query("contactId" -> "123") -> Seq(0, 1, 11, 15, 17, 18, 21, 22, 25),
+    query("contactId" -> "123") -> Seq(0, 1, 11, 15, 17, 18, 21, 22),
     query("tenantId" -> "7") -> Seq(0, 1, 2, 3, 4, 7, 15, 16, 19, 21, 22, 23),
     query("contactId" -> "123", "tenantId" -> "7") -> Seq(0, 1, 15, 21, 22),
     query("tenantId" -> "-7") -> Seq(10, 11),
@@ -135,38 +139,69 @@ class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
   private def reference(dir: String, q: RecordsQuery.Query): DataFrame =
     EventSchema.parse(KplExplode.userRecords(RecordsQuery.lookback(envelope(dir), q, now)))
       .filter(RecordsQuery.predicate(q))
-      .select(col("json"), col("event"))
+      .select(col("json"))
 
-  /** Each row's `json` bytes (hex, so invalid UTF-8 survives a memory
-    * sink too) and `event`. */
+  /** Each row's `json` bytes, in hex, so invalid UTF-8 survives a memory
+    * sink too. */
   private def encoded(df: DataFrame): DataFrame =
-    df.select(hex(col("json").cast("binary")).as("json"),
-      coalesce(to_json(col("event")), lit("null")).as("event"))
+    df.select(hex(col("json").cast("binary")).as("json"))
 
-  private def rows(df: DataFrame): Seq[(String, String)] =
-    df.collect().map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.getString(0)).toSeq.sorted
 
   private def fromJsons(df: DataFrame): Seq[JsonToStructs] =
     df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
       _.collect { case j: JsonToStructs => j }))
+
+  /** The name of each operator that evaluates a `from_json`, once per
+    * call it holds. */
+  private def decodeSites[T <: QueryPlan[T]](plan: T): Seq[String] =
+    plan.flatMap(p => p.expressions.flatMap(
+      _.collect { case _: JsonToStructs => p.nodeName }))
+
+  /** The executed plan of a stream's last micro-batch, after an
+    * `AvailableNow` drain into the noop sink. */
+  private def executedPlan(stream: DataFrame): SparkPlan = {
+    val query = stream.writeStream.format("noop").trigger(Trigger.AvailableNow()).start()
+    query.awaitTermination(60000)
+    query.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+  }
 
   private def guardTexts(j: JsonToStructs): Set[String] =
     j.child.collect { case Contains(_, Literal(v, StringType)) => v.toString }.toSet
 
   test("the optimized plan guards its one from_json input with every numeric id") {
     val dir = store()
-    val guarded = fromJsons(RecordsQuery.plan(envelope(dir),
-      query("contactId" -> "123", "tenantId" -> "-7", "serverName" -> "c1"), now))
+    val filtered = query("contactId" -> "123", "tenantId" -> "-7", "serverName" -> "c1")
+    val guarded = fromJsons(RecordsQuery.plan(envelope(dir), filtered, now))
     guarded.map(guardTexts).distinct shouldBe Seq(Set("123", "-7"))
-    guarded.map(_.canonicalized).distinct should have size 1
-    for (q <- Seq(query(), query("serverName" -> "c1"))) {
-      val plain = fromJsons(RecordsQuery.plan(envelope(dir), q, now))
-      plain.map(_.canonicalized).distinct should have size 1
-      plain.flatMap(_.child.collect { case c: Contains => c }) shouldBe empty
+    guarded.map(_.child.canonicalized).distinct should have size 1
+    // One decode per top-level field the filters read, narrowed to it.
+    guarded.map(_.schema.asInstanceOf[StructType].fieldNames.toSeq).toSet shouldBe
+      Set(Seq("baseEventData"), Seq("tenantId"))
+    val plain = fromJsons(RecordsQuery.plan(envelope(dir), query("serverName" -> "c1"), now))
+    plain.map(_.canonicalized).distinct should have size 1
+    plain.flatMap(_.child.collect { case c: Contains => c }) shouldBe empty
+    // The answer is `json` alone, so `from_json` feeds only the filter, and
+    // a query without filters never decodes.
+    for (q <- Seq(filtered, query())) {
+      val batch = RecordsQuery.plan(envelope(dir), q, now)
+      val stream = RecordsStream.records(RecordsStream.envelopeStream(spark, dir, q, nowMs), q)
+      batch.columns.toSeq shouldBe Seq("json")
+      stream.columns.toSeq shouldBe Seq("json")
+      for ((name, sites) <- Seq(
+          "batch optimized" -> decodeSites(batch.queryExecution.optimizedPlan),
+          "stream executed" -> decodeSites(executedPlan(stream))))
+        withClue(s"$name plan of $q: ") {
+          if (q == filtered) {
+            sites should not be empty
+            sites.distinct shouldBe Seq("Filter")
+          } else sites shouldBe empty
+        }
     }
   }
 
-  test("guarded and unguarded plans return the same json and event rows, batch and stream") {
+  test("guarded and unguarded plans return the same json rows, batch and stream") {
     val dir = store()
     for (((q, kept), i) <- queries.zipWithIndex) {
       val want = rows(encoded(reference(dir, q)))
@@ -179,7 +214,7 @@ class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
       withClue(s"stream $q: ") { rows(spark.table(s"id_guard_$i")) shouldBe want }
       // Not vacuous: each kept payload, read bare and inside the aggregate.
       val hexes = payloads.map(p => Hex.encodeHexString(p, false))
-      want.map(r => hexes.indexOf(r._1)).sorted shouldBe kept.flatMap(k => Seq(k, k)).sorted
+      want.map(hexes.indexOf(_)).sorted shouldBe kept.flatMap(k => Seq(k, k)).sorted
     }
   }
 }

@@ -149,14 +149,6 @@ class RecordsQuerySpec extends AnyFunSuite with Matchers with SparkSpec {
     got shouldBe Seq(hit)
   }
 
-  test("invalid JSON payloads surface via the INVALID JSON corrupt column") {
-    val junk = "not json at all"
-    val df = RecordsQuery.records(
-      envelope(Seq((1L, bare(junk)))), Map("streamname" -> "s"), now).toOption.get
-    val rows = df.select("event.`INVALID JSON`").collect()
-    rows.map(_.getString(0)) shouldBe Array(junk)
-  }
-
   test("golden e2e: unfiltered query echoes all in-window records as a JSON array") {
     val a = contactEvent(Some(1L))
     val b = agentEvent(Some(2L))

@@ -243,6 +243,21 @@ class ShardBackendSpec extends AnyFunSuite with Matchers with SparkSpec {
     be.read("shardId-000", 1L, 5L).map(_.sequence) shouldBe (1L until 5L)
   }
 
+  test("an iterator that opens at TRIM_HORIZON pages up to `from` in full pages, not range-wide ones") {
+    // Every open lands at position 0 (no anchor at or below `from`).
+    val api = new StubKinesisApi(Map("s0" -> (0L until 2000L).map(i =>
+      ShardRecord(i, 1000 + i, s"pk$i", Array.emptyByteArray)))) {
+      override def getShardIterator(streamName: String, shardId: String,
+                                    from: Long): String = s"$shardId/0"
+    }
+    val backend = new KinesisShardBackend(api, "s")
+    backend.read("s0", 500L, 501L).map(_.sequence) shouldBe Seq(500L)
+    api.getRecordsCalls should be <= 2
+    api.getRecordsCalls = 0
+    backend.latestPosition("s0", 500L, 1L) shouldBe 501L
+    api.getRecordsCalls should be <= 2
+  }
+
   test("an advancing adapter with underfilled pages completes a large range (no page-count trap)") {
     // 1 record per page regardless of the requested limit: 500 pages for a
     // 500-record range. Progress resets the guard, so this must succeed.
