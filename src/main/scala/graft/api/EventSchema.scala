@@ -1,8 +1,10 @@
 package graft.api
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.plans.BoundLong
 
 /** The implied event schema of the reference's filter module (SURVEY.md §1.2).
   *
@@ -14,6 +16,12 @@ import org.apache.spark.sql.types._
   * evaluates to null and comparisons propagate to false — reproducing the
   * reference's try/catch→false semantics (`objectFilter/index.js:17-19`)
   * without any per-row exception machinery.
+  *
+  * The id filters compare each leaf with a [[BoundLong]], which generated
+  * code reads by reference, not a `Literal`, whose value would be spelled
+  * in the source. Requests that name the same filters with other ids thus
+  * generate the same predicate source, and Spark's codegen cache compiles
+  * it once per filter shape, not once per request.
   */
 object EventSchema {
 
@@ -61,19 +69,24 @@ object EventSchema {
   private def shiftPath(leaf: String): Column =
     col(s"event.baseEventData.`$AgentEventClass`.agentShiftIdentification.$leaf.long")
 
+  private def bound(id: Long): Column = GraftBridge.column(BoundLong(id))
+
   /** Main/alt equality filters (SURVEY.md O6-O10). A null (missing) path
     * compares to null → row filtered out, matching catch→false. */
   def contactIdFilter(id: Long): Column =
-    contactPath("contactId") === id || contactPath("contactIdAlt") === id
+    contactPath("contactId") === bound(id) || contactPath("contactIdAlt") === bound(id)
   def agentIdFilter(id: Long): Column =
-    agentPath("agentId") === id || agentPath("agentIdAlt") === id
+    agentPath("agentId") === bound(id) || agentPath("agentIdAlt") === bound(id)
   def agentShiftIdFilter(id: Long): Column =
-    shiftPath("agentShiftId") === id || shiftPath("agentShiftIdAlt") === id
+    shiftPath("agentShiftId") === bound(id) || shiftPath("agentShiftIdAlt") === bound(id)
   def tenantIdFilter(id: Long): Column =
-    col("event.tenantId.tenantId.long") === id ||
-      col("event.tenantId.tenantIdAlt.long") === id
+    col("event.tenantId.tenantId.long") === bound(id) ||
+      col("event.tenantId.tenantIdAlt.long") === bound(id)
+  /** Case-insensitive: Spark's `lower` maps both sides, so the match does
+    * not depend on the JVM's default locale; the right side folds to a
+    * literal. */
   def serverNameFilter(name: String): Column =
-    lower(col("event.tenantId.serverName.string")) === name.toLowerCase
+    lower(col("event.tenantId.serverName.string")) === lower(lit(name))
 
   /** Parse the UTF-8 JSON `payload` column into `event` (typed) + raw `json`.
     *

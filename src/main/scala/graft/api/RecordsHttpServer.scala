@@ -44,12 +44,17 @@ import org.apache.spark.sql.DataFrame
   *    for every call still open, whose jobs are cancelled the same way.
   *
   * Start-up cost. The deadline has no exemption for the first call: if
-  * the SparkSession is not running yet, or the call's plan is the first
-  * the JVM generates code for, that call pays it inside its 5 s and may
-  * answer 504. Callers start the session before [[start]] and send
-  * warm-up calls before serving load, as `RecordsHttpServerSpec.beforeAll`
-  * (which touches `spark.sparkContext`) and perfbench's set-up (warm-up
-  * requests after each start) do.
+  * the SparkSession is not running yet, or the call is the first of its
+  * filter shape (which of the five filters it names), that call pays the
+  * session start or the code generation inside its 5 s and may answer
+  * 504. Generated code depends on the shape, not on the ids
+  * ([[EventSchema]]), so one warm-up call per shape covers every later
+  * call of that shape. Callers start the session before [[start]] and
+  * send warm-up calls before serving load, as
+  * `RecordsHttpServerSpec.beforeAll` (which touches `spark.sparkContext`)
+  * and perfbench's set-up (warm-up requests after each start) do.
+  * [[start]] itself warms nothing, so it stays as cheap as binding the
+  * port.
   *
   * The response body is the reference-parity bounded echo
   * ([[RecordsQuery.toJsonArray]]); a production deployment sinks the same

@@ -3,30 +3,34 @@ package graft.api
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 import java.time.Instant
+import java.util.Locale
 
 import org.apache.commons.codec.binary.Hex
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.{Contains, JsonToStructs, Literal}
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.{Contains, Expression, JsonToStructs, Literal}
 import org.apache.spark.sql.catalyst.plans.QueryPlan
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
 import graft.SparkSpec
 import graft.kpl.KplCodec
-import graft.plans.KplExplode
+import graft.plans.{BoundLong, KplExplode}
 import graft.sources.{KplFileSource, KplShardFiles}
 import graft.streaming.RecordsStream
 
 /** The raw id guard in front of the pipeline's `from_json`
-  * ([[EventSchema.parse]]): it sits inside the decode's input, and it never
-  * changes an answer. Every guarded plan is compared with the unguarded
-  * reference `EventSchema.parse(df).filter(RecordsQuery.predicate(q))` over
-  * payloads built to fool a byte test. */
+  * ([[EventSchema.parse]]) and the ids the filters compare by reference
+  * ([[graft.plans.BoundLong]]): the guard sits inside the decode's input,
+  * neither changes an answer, and a request of a seen filter shape compiles
+  * no code. Every plan is compared with the unguarded decode filtered by
+  * plain literal comparisons written out in this spec, over payloads built
+  * to fool a byte test. */
 class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
 
   private val nowMs = 960L * 60000L
@@ -135,10 +139,29 @@ class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
   private def envelope(dir: String): DataFrame =
     spark.read.format(KplFileSource.ProviderClass).option("path", dir).load()
 
+  /** The query's filters as plain `lit` comparisons on the event's
+    * paths, independent of [[EventSchema]]'s filter builders. */
+  private def literalPredicate(q: RecordsQuery.Query): Column = {
+    val contact = s"event.baseEventData.`${EventSchema.ContactEventClass}`" +
+      ".mediaScopeIdentification.contactIdentification"
+    val shift = s"event.baseEventData.`${EventSchema.AgentEventClass}`.agentShiftIdentification"
+    def either(main: String, alt: String)(id: Long): Column =
+      col(s"$main.long") === lit(id) || col(s"$alt.long") === lit(id)
+    Seq(
+      q.contactId.map(either(s"$contact.contactId", s"$contact.contactIdAlt")),
+      q.agentId.map(either(s"$shift.agentIdentification.agentId",
+        s"$shift.agentIdentification.agentIdAlt")),
+      q.serverName.map(n =>
+        lower(col("event.tenantId.serverName.string")) === lit(n.toLowerCase(Locale.ROOT))),
+      q.tenantId.map(either("event.tenantId.tenantId", "event.tenantId.tenantIdAlt")),
+      q.agentShiftId.map(either(s"$shift.agentShiftId", s"$shift.agentShiftIdAlt")),
+    ).flatten.reduceOption(_ && _).getOrElse(lit(true))
+  }
+
   /** The unguarded reference: decode every payload, then filter. */
   private def reference(dir: String, q: RecordsQuery.Query): DataFrame =
     EventSchema.parse(KplExplode.userRecords(RecordsQuery.lookback(envelope(dir), q, now)))
-      .filter(RecordsQuery.predicate(q))
+      .filter(literalPredicate(q))
       .select(col("json"))
 
   /** Each row's `json` bytes, in hex, so invalid UTF-8 survives a memory
@@ -158,6 +181,10 @@ class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
   private def decodeSites[T <: QueryPlan[T]](plan: T): Seq[String] =
     plan.flatMap(p => p.expressions.flatMap(
       _.collect { case _: JsonToStructs => p.nodeName }))
+
+  /** The expressions of each operator that evaluates a `from_json`. */
+  private def decodeExpressions[T <: QueryPlan[T]](plan: T): Seq[Expression] =
+    plan.flatMap(p => p.expressions.filter(_.exists(_.isInstanceOf[JsonToStructs])))
 
   /** The executed plan of a stream's last micro-batch, after an
     * `AvailableNow` drain into the noop sink. */
@@ -189,15 +216,46 @@ class IdGuardSpec extends AnyFunSuite with Matchers with SparkSpec {
       val stream = RecordsStream.records(RecordsStream.envelopeStream(spark, dir, q, nowMs), q)
       batch.columns.toSeq shouldBe Seq("json")
       stream.columns.toSeq shouldBe Seq("json")
-      for ((name, sites) <- Seq(
-          "batch optimized" -> decodeSites(batch.queryExecution.optimizedPlan),
-          "stream executed" -> decodeSites(executedPlan(stream))))
+      val optimized = batch.queryExecution.optimizedPlan
+      val executed = executedPlan(stream)
+      for ((name, sites, exprs) <- Seq(
+          ("batch optimized", decodeSites(optimized), decodeExpressions(optimized)),
+          ("stream executed", decodeSites(executed), decodeExpressions(executed))))
         withClue(s"$name plan of $q: ") {
           if (q == filtered) {
             sites should not be empty
             sites.distinct shouldBe Seq("Filter")
+            // The ids reach the decoding filter as references, never as
+            // `bigint` literals spelled in its generated source.
+            exprs.flatMap(_.collect { case l @ Literal(_, LongType) => l }) shouldBe empty
+            exprs.flatMap(_.collect { case b: BoundLong => b.value }).toSet shouldBe Set(123L, -7L)
           } else sites shouldBe empty
         }
+    }
+  }
+
+  test("a request of a served filter shape compiles no code, whatever its ids") {
+    val dir = store()
+    val hexes = payloads.map(p => Hex.encodeHexString(p, false))
+    // (contactId, tenantId) -> the payloads kept, each bare and aggregated.
+    val requests = Seq(
+      ("123", "7") -> Seq(0, 1, 15, 21, 22),
+      ("-123", "-7") -> Seq(10),
+      ("123", "-7") -> Seq(11),
+      ("1234", "71") -> Seq(8),
+      ("7", "123") -> Seq(9),
+      ("5", "7") -> Seq(7, 16, 23))
+    for ((((contact, tenant), kept), i) <- requests.zipWithIndex) {
+      val q = query("contactId" -> contact, "tenantId" -> tenant)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val df = RecordsQuery.plan(envelope(dir), q, now)
+      RecordsQuery.toJsonArray(df) // served as the server does, then read back
+      val got = rows(encoded(df))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiled
+      withClue(s"$q: ") {
+        if (i > 0) compiles shouldBe 0
+        got.map(hexes.indexOf(_)).sorted shouldBe kept.flatMap(k => Seq(k, k)).sorted
+      }
     }
   }
 

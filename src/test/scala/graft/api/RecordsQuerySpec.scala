@@ -3,6 +3,7 @@ package graft.api
 import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.time.Instant
+import java.util.Locale
 
 import java.util.concurrent.atomic.AtomicInteger
 
@@ -126,6 +127,19 @@ class RecordsQuerySpec extends AnyFunSuite with Matchers with SparkSpec {
         Seq((1L, bare(x)), (2L, bare(y)))) shouldBe Seq(x)
     run(Map("streamname" -> "s", "tenantId" -> "42"),
         Seq((1L, bare(x)), (2L, bare(y)))) shouldBe Seq(x)
+  }
+
+  test("serverName matches the same rows whatever the JVM's default locale") {
+    val lowerCase = contactEvent(Some(1L), server = Some("irvine"))
+    val upperCase = contactEvent(Some(2L), server = Some("IRVINE"))
+    // Dotless ı: the Turkish lower case of `I`, and another server's name.
+    val dotless = contactEvent(Some(3L), server = Some("\u0131rv\u0131ne"))
+    val rows = Seq((1L, bare(lowerCase)), (2L, bare(upperCase)), (3L, bare(dotless)))
+    val saved = Locale.getDefault
+    Locale.setDefault(Locale.forLanguageTag("tr-TR"))
+    try run(Map("streamname" -> "s", "serverName" -> "IRVINE"), rows).toSet shouldBe
+      Set(lowerCase, upperCase)
+    finally Locale.setDefault(saved)
   }
 
   test("filters compose conjunctively (O11)") {
